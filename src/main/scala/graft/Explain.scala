@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump formatted physical plans for selected queries so plan
   * regressions (lost pushdown, surprise SortMergeJoin, broken codegen)
@@ -9,14 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder("graft-explain", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val wanted = if (args.nonEmpty) args.toSet else Set(
       "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",

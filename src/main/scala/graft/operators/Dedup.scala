@@ -475,7 +475,7 @@ object Dedup {
     // hint must never be able to OOM at 100x, and neither Catalyst
     // stats — the checkpoint keeps the origin's join-sized estimate —
     // nor AQE — both SMJ exchanges submit before member stats arrive,
-    // ScratchProbe measured exactly that race — gets this right on its
+    // PERF_NOTES §10 records exactly that race — gets this right on its
     // own) lives in pruneSigsToMembers. Above the bound the semi join
     // degrades to the linear shuffle join instead of a driver OOM.
     val hashed = pruneSigsToMembers(sigs,
@@ -516,7 +516,7 @@ object Dedup {
     * loop's derived frames: localCheckpoint keeps the ORIGIN's
     * join-sized estimate, and AQE submits both SMJ exchanges together,
     * so the registry-side shuffle is already written before runtime
-    * stats exist (ScratchProbe measured exactly that race). Bytes, not
+    * stats exist (PERF_NOTES §10 records exactly that race). Bytes, not
     * rows: ids can be wide (URLs), and the whole point of the measured
     * guard is that the hint can NEVER build an over-sized driver
     * relation — above the bound the caller's join degrades to the

@@ -130,7 +130,7 @@ object CdcSink {
     GraftRowStore.get(StateTable).flatMap { t =>
       val s = t.snapshot
       s.probe(stateKey(queryName, table), s.refs).map { case (packId, slot) =>
-        GraftRowStore.PackRegistry.pack(packId).rows(slot).getLong(2)
+        GraftRowStore.PackRegistry.get(packId).rows(slot).getLong(2)
       }
     }
 

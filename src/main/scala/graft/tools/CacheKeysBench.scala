@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
@@ -21,14 +20,7 @@ import graft.GraftSession
   */
 object CacheKeysBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder("graft-cache-keys-bench", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val g = GraftSession(spark)
     val n = sys.env.getOrElse("CKB_ROWS", "50000000").toLong

@@ -21,15 +21,7 @@ object CrossJvmRestore {
 
   def main(args: Array[String]): Unit = {
     val Array(mode, dir) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder("graft-cross-jvm-restore", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     mode match {
       case "write" => write(spark, dir)

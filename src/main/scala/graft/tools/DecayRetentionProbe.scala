@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Retention-loop probe for the Hokusai topk store at a REALISTIC epoch
@@ -15,14 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object DecayRetentionProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder("graft-decay-retention-probe", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val g = graft.GraftSession(spark)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.store.{GraftColumnStore, GraftStoreOps, LiveCheckpoint}
 
@@ -20,12 +19,7 @@ object IncPublishBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("inc-publish-bench")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = graft.LocalSession.builder("inc-publish-bench", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fmt = GraftStoreOps.FORMAT
     val n = args.headOption.map(_.toLong).getOrElse(4000000L)

@@ -27,14 +27,7 @@ object LiveStoreServe {
   private val ROW_SERVED = "live_r_served"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder("graft-live-store-serve", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.toList match {
       case "ingest" :: root :: epochs :: Nil => ingest(spark, root, epochs.toInt)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.{GraftSession, Tables}
@@ -17,17 +16,7 @@ object MvPhaseProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-mv-phase-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder("graft-mv-phase-probe", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val g = GraftSession(spark)
 

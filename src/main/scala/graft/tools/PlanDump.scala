@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for a set of SparkEntry queries to files —
   * the optimization-round evidence artifact (`plans/r15/<q>_{before,after}.txt`).
@@ -20,17 +19,7 @@ object PlanDump {
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").map(_.trim).toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder("graft-plandump", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     graft.SparkEntry.allDefs

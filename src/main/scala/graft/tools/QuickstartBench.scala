@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The reference's HEADLINE benchmark, reproduced at its own protocol:
@@ -23,14 +22,7 @@ import org.apache.spark.sql.functions._
   */
 object QuickstartBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder("graft-quickstart-bench", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val n = sys.env.getOrElse("QS_ROWS", "100000000").toLong
     val fmt = "org.apache.spark.sql.graft.store.GraftColumnSource"

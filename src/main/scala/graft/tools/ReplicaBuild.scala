@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-replica builder (dev tool, not a driver gate): materialize an
@@ -46,12 +46,8 @@ object ReplicaBuild {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val out = if (args.length > 2) args(2) else s"/tmp/graft_replica$mult"
-    val spark = SparkSession.builder().master(
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-replica-build")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
+    val spark = graft.LocalSession
+      .builder("graft-replica-build", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -79,7 +75,8 @@ object ReplicaBuild {
     replicate("supplier", Map("s_suppkey" -> KS))
     Seq("nation", "region").foreach(n => write(n, load(n)))
 
-    // documents: token-salted per replica (disjoint shingle/vocab spaces)
+    // documents: token-salted per replica (disjoint shingle/vocab spaces);
+    // n_chars follows the salted text, which is longer than the source's
     locally {
       val d = load("documents").crossJoin(reps)
       write("documents", d.select(
@@ -87,7 +84,8 @@ object ReplicaBuild {
         when(col("text").isNull, col("text")).otherwise(
           array_join(transform(split(col("text"), "\\s+"),
             t => concat(t, lit("_"), col("__rep"))), " ")).as("text"),
-        col("lang"), col("source"), col("n_chars")))
+        col("lang"), col("source"))
+        .withColumn("n_chars", length(col("text")).cast("bigint")))
     }
     replicate("events", Map("event_id" -> KE, "user_id" -> KE))
     replicate("embeddings", Map("vec_id" -> KV))

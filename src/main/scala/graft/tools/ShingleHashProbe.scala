@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Collision audit for the hashed-shingle dedup keys (Dedup.hashedShingles):
@@ -14,12 +13,7 @@ object ShingleHashProbe {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-shingle-hash-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder("graft-shingle-hash-probe", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     dirs.foreach { dir =>
       val docs = graft.Tables.load(spark, dir, "documents")

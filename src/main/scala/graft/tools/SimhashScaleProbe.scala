@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Isolate q_dedup_simhash's replica-scale cost: time (a) the signature
@@ -11,13 +11,7 @@ object SimhashScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft_replica10")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-simhash-scale-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder("graft-simhash-scale-probe", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def t(label: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime(); f

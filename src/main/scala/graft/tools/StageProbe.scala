@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -16,17 +15,7 @@ object StageProbe {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stage-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder("graft-stage-probe", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = graft.SparkEntry.allDefs.find(_.name == qName)
       .getOrElse(sys.error(s"unknown query $qName"))

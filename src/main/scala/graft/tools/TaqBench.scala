@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
@@ -25,15 +25,7 @@ import graft.GraftSession
   */
 object TaqBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.store.GraftCatalog")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder("graft-taq-bench", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val g = GraftSession(spark)
     val nQ = sys.env.getOrElse("TAQ_QUOTES", "34000000").toLong

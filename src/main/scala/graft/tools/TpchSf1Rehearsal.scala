@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1.0 TPC-H rehearsal (dev tool, not a driver gate): materialize a
@@ -25,10 +25,7 @@ object TpchSf1Rehearsal {
   private val KS = 1000000000L // suppkey stride
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder("graft-tpch-sf1-rehearsal", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")

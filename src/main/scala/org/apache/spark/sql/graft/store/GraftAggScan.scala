@@ -31,8 +31,8 @@ import scala.collection.immutable.BitSet
   *    beats the un-pushed plan: rows never materialize into vectors and
   *    only group-sized partials reach the shuffle.
   *
-  * Measured (graft.tools.AggBench, 10M rows, local[32], interleaved
-  * A/B): dict groupBy(7 values) count+sum 1.48× over the un-pushed
+  * Measured (PERF_NOTES §47, 10M rows, local[32], interleaved A/B):
+  * dict groupBy(7 values) count+sum 1.48× over the un-pushed
   * plan, groupBy(1000) 1.19×, stats-served global count/min/max at
   * parity at this scale (both planning-bound at ~0.13 s; the pushed
   * path reads O(batches) stats where the un-pushed one scans O(rows),
@@ -332,7 +332,7 @@ class GraftAggReaderFactory(fullSchema: StructType,
     */
   private def accumulateLoop(w: BatchWork, acc: Accs,
       ops: Array[(AggOp, Int)]): Unit = {
-    val batch = BatchRegistry.batch(w.ref.id)
+    val batch = BatchRegistry.get(w.ref.id)
     val n = w.ref.numRows
     val dels = w.deletes.map(_.bitset).getOrElse(BitSet.empty)
     // memoized per column: on batches carrying update deltas the merge
@@ -413,7 +413,7 @@ class GraftAggReaderFactory(fullSchema: StructType,
     val singleGroup = spec.groupCols.length == 1
 
     works.foreach { w =>
-      val batch = BatchRegistry.batch(w.ref.id)
+      val batch = BatchRegistry.get(w.ref.id)
       val n = w.ref.numRows
       val dels = w.deletes.map(_.bitset).getOrElse(BitSet.empty)
       val groupData = spec.groupCols.map(c => mergedColumn(w, batch, c))

@@ -617,7 +617,7 @@ class GraftReaderFactory(fullSchema: StructType, required: StructType,
     * earlier deletes.
     */
   private def decode(w: BatchWork): ColumnarBatch = {
-    val batch = GraftColumnStore.BatchRegistry.batch(w.ref.id)
+    val batch = GraftColumnStore.BatchRegistry.get(w.ref.id)
     val n = w.ref.numRows
     // bitmap payload resolves task-side from the registry; the planned
     // work item carried only the ref

@@ -54,8 +54,9 @@ object StoreClock {
   *    DictionaryEncoding.scala). The scan decodes straight into Spark
   *    `ColumnarBatch` vectors.
   *
-  * Payload lifecycle: superseded payloads (truncate / compact / overwrite
-  * retirees) are reference-counted per snapshot by [[LeaseGc]] — scans pin
+  * Payload lifecycle ([[VersionedTable]], shared with row tables):
+  * superseded payloads (truncate / compact / overwrite retirees) are
+  * reference-counted per snapshot by [[LeaseGc]] — scans pin
   * the snapshot epoch they planned against, and a retiree frees once no
   * reachable reader lease pins an epoch at or before its retirement
   * (Cleaner-driven, so abandoned plans cannot leak leases). Table DROP
@@ -458,118 +459,18 @@ object GraftColumnStore {
       val rows: Array[Int],
       val values: Array[Any]) extends Serializable
 
-  /** Process-wide payload tier — written directly by writer/mutation
-    * TASKS (executor-resident), read by scan tasks; only ids cross the
-    * driver. On a real cluster this is the node-local store.
+  /** Process-wide payload tier (see [[PayloadRegistry]]): sealed batches
+    * with the LRU disk overflow (EVICTION_BY 'LRUMEMSIZE n' + OVERFLOW
+    * 'true'), plus the update-delta and delete-bitmap payloads, which
+    * never spill. All three kinds draw ids from one counter.
     */
-  object BatchRegistry {
-    private val nextId = new AtomicLong(0)
-    private val batches = TrieMap.empty[Long, StoreBatch]
+  object BatchRegistry extends PayloadRegistry[StoreBatch](
+      "graftstore batch", _.sizeBytes, "graft-overflow-", "batch") {
     private val deltas = TrieMap.empty[Long, ColumnDeltaPayload]
     private val bitmaps = TrieMap.empty[Long, Array[Long]]
 
-    // ---- disk tier (EVICTION_BY 'LRUMEMSIZE n' + OVERFLOW 'true',
-    // reference StoreUtils.scala:42-58 / GemFire LRU-overflow regions):
-    // spilled batches live as LZ4-deflated serialized files; access
-    // reloads a TRANSIENT copy (not re-cached — a reload that re-entered
-    // the resident tier would thrash against the budget it was evicted
-    // for). On a cluster these files are executor-local disk, exactly
-    // where the payloads already live. Sizes and access ticks are
-    // metadata so planning (estimateStatistics) and the LRU policy never
-    // touch payloads.
-    private val spilledFiles = TrieMap.empty[Long, java.nio.file.Path]
-    private val batchSizes = TrieMap.empty[Long, Long]
-    private val accessTick = new AtomicLong
-    private val lastAccess = TrieMap.empty[Long, Long]
-    private lazy val spillDir =
-      SpillSweep.registeredTempDir("graft-overflow-", "graft-spill-sweep")
-
-    /** Resident-tier peek: no spill reload, no LRU touch — for plan-time
-      * heuristics that must never perturb the tier they inspect.
-      */
-    def residentBatch(id: Long): Option[StoreBatch] = batches.get(id)
-
-    def putBatch(b: StoreBatch): Long = {
-      val id = nextId.incrementAndGet()
-      batches.put(id, b)
-      // sizes stay LAZY (see sizeBytes) — the O(rows) size fold on seal
-      // would tax every ingest for a statistic only planning asks for
-      lastAccess.put(id, accessTick.incrementAndGet())
-      id
-    }
-    def batch(id: Long): StoreBatch = {
-      // touch AFTER the hit — a blind put racing a release would leave a
-      // permanent lastAccess entry for a dead id (the residual
-      // hit-then-release window leaks one long per race; bounded by
-      // concurrent scans, negligible)
-      batches.get(id) match {
-        case Some(b) =>
-          lastAccess.put(id, accessTick.incrementAndGet())
-          b
-        case None => spilledFiles.get(id) match {
-          case Some(path) =>
-            lastAccess.put(id, accessTick.incrementAndGet())
-            val in = new java.io.ObjectInputStream(new net.jpountz.lz4.LZ4BlockInputStream(
-              java.nio.file.Files.newInputStream(path)))
-            try in.readObject().asInstanceOf[StoreBatch] finally in.close()
-          case None =>
-            throw new IllegalStateException(s"graftstore batch payload missing: $id")
-        }
-      }
-    }
-    /** Resident (heap) payload size; 0 once spilled. */
-    def residentBytes(id: Long): Long =
-      if (batches.contains(id)) sizeBytes(id) else 0L
-    /** Size metadata, computed on first ask and memoized — planning and
-      * the LRU policy read this; spilled batches keep their last
-      * resident size so estimateStatistics never faults payloads in.
-      */
-    def sizeBytes(id: Long): Long = batchSizes.get(id) match {
-      case Some(s) => s
-      case None =>
-        batches.get(id) match {
-          case Some(b) =>
-            val s = b.sizeBytes
-            batchSizes.put(id, s)
-            s
-          case None => 0L
-        }
-    }
-    def isResident(id: Long): Boolean = batches.contains(id)
-    /** Move one resident batch to the disk tier (no-op if already there
-      * or unknown). Synchronized per call so two concurrent evictions of
-      * the same id don't double-write.
-      */
-    def spill(id: Long): Unit = synchronized {
-      batches.get(id).foreach { b =>
-        batchSizes.put(id, sizeBytes(id)) // pin (memoized) size before the payload leaves heap
-        val path = spillDir.resolve(s"batch-$id.lz4")
-        val out = new java.io.ObjectOutputStream(new net.jpountz.lz4.LZ4BlockOutputStream(
-          java.nio.file.Files.newOutputStream(path)))
-        try out.writeObject(b) finally out.close()
-        spilledFiles.put(id, path)
-        batches.remove(id)
-      }
-    }
-    /** LRU eviction: spill least-recently-accessed resident batches from
-      * `ids` until their resident total is ≤ `budgetBytes`.
-      */
-    def enforceBudget(ids: Seq[Long], budgetBytes: Long): Unit = {
-      var resident = ids.map(residentBytes).sum
-      if (resident <= budgetBytes) return
-      val lru = ids.filter(isResident)
-        .sortBy(id => lastAccess.getOrElse(id, 0L))
-      var i = 0
-      while (resident > budgetBytes && i < lru.length) {
-        val id = lru(i)
-        val sz = residentBytes(id)
-        spill(id)
-        resident -= sz
-        i += 1
-      }
-    }
     def putDelta(d: ColumnDeltaPayload): Long = {
-      val id = nextId.incrementAndGet()
+      val id = newId()
       deltas.put(id, d)
       id
     }
@@ -580,7 +481,7 @@ object GraftColumnStore {
       * (same executor-resident design as batch/delta payloads).
       */
     def putBitmap(words: Array[Long]): Long = {
-      val id = nextId.incrementAndGet()
+      val id = newId()
       bitmaps.put(id, words)
       id
     }
@@ -623,18 +524,9 @@ object GraftColumnStore {
     /** Pinned-bitmap telemetry: (live pins, deferred frees). */
     def bitmapPinStats: (Int, Int) =
       synchronized { (bitmapPins.size, deferredBitmapFrees.size) }
-    // synchronized WITH spill(): an unsynchronized release racing a spill
-    // could interleave after spill's payload read but before its
-    // spilledFiles.put, resurrecting a file entry for a released id (disk
-    // leak + batch(id) silently serving a dead payload)
     def release(batchIds: Iterable[Long], deltaIds: Iterable[Long],
         bitmapIds: Iterable[Long] = Nil): Unit = synchronized {
-      batchIds.foreach { id =>
-        batches.remove(id)
-        batchSizes.remove(id)
-        lastAccess.remove(id)
-        spilledFiles.remove(id).foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      release(batchIds)
       deltaIds.foreach(deltas.remove)
       bitmapIds.foreach { id =>
         if (bitmapPins.contains(id)) deferredBitmapFrees += id
@@ -667,7 +559,7 @@ object GraftColumnStore {
       numRows: Int,
       stats: Array[ColumnStats],
       isDelta: Boolean,
-      createdAtMs: Long = 0L) extends Serializable
+      createdAtMs: Long = 0L) extends SealedRef with Serializable
 
   /** `sketch`: HLL digest of the delta's replacement values when the
     * column is sketched (null otherwise) — UPDATE can introduce values
@@ -706,20 +598,7 @@ object GraftColumnStore {
       evictionBudget: Long = 0L,
       zorderedBy: Seq[String] = Nil,
       sketchBy: Seq[String] = Nil,
-      expireSeconds: Long = 0L) {
-    /** Batch-granularity TTL check (EXPIRE): true once every row in the
-      * batch is older than the table's time-to-live. 0 = no expiry.
-      */
-    def isExpired(ref: BatchRef, nowMs: Long): Boolean =
-      expireSeconds > 0 && ref.createdAtMs > 0 &&
-        nowMs - ref.createdAtMs > expireSeconds * 1000L
-    /** Refs with at least one row inside the TTL — what every read path
-      * (row scan, agg pushdown, sketch union) must enumerate. One clock
-      * read per call, so a single planning sees one consistent cut.
-      */
-    def liveRefs: Vector[BatchRef] =
-      if (expireSeconds <= 0) refs
-      else { val now = StoreClock.nowMs; refs.filterNot(isExpired(_, now)) }
+      expireSeconds: Long = 0L) extends StoreSnapshot[BatchRef] {
     def rowCount: Long = liveRefs.iterator
       .map(r => r.numRows.toLong - deletes.get(r.id).map(_.cardinality).getOrElse(0)).sum
     def liveRows(ref: BatchRef): Int =
@@ -751,43 +630,13 @@ object GraftColumnStore {
     def isEmpty: Boolean = batches.isEmpty && deltas.isEmpty && bitmaps.isEmpty
   }
 
-  final class StoreTable(val name: String, initial: TableSnapshot) {
-    @volatile private var current: TableSnapshot = initial
-    def snapshot: TableSnapshot = current
-    def schema: StructType = current.schema
-
-    // Reader-lease payload GC (see [[LeaseGc]]): payloads superseded by a
-    // swap stay resolvable while any scan pinned to an older snapshot is
-    // still reachable (a physical plan is multi-execution, so lease
-    // lifetime is reachability of the Scan/reader factory, not a count
-    // of one execution's reader closes).
-    private val gc = new LeaseGc[Retirees](r =>
-      BatchRegistry.release(r.batches, r.deltas, r.bitmaps))
-
-    /** Atomically capture the snapshot AND open a reader lease at its
-      * epoch — scans call this once, then register themselves (and their
-      * reader factory) via [[addLeaseOwner]]; the lease drops when every
-      * owner is unreachable.
-      */
-    def pinSnapshot(): (TableSnapshot, Long) = synchronized { (current, gc.pin()) }
-    def addLeaseOwner(leaseId: Long, owner: AnyRef): Unit = gc.addOwner(leaseId, owner)
-    /** (live leases, pending retiree sets) — spec telemetry. */
-    def gcStats: (Int, Int) = gc.stats
-
-    def mutate(f: TableSnapshot => TableSnapshot): TableSnapshot =
-      mutateRetiring { s => (f(s), None) }
-
-    /** Snapshot swap + retiree recording in ONE critical section: two
-      * concurrent commits can no longer interleave swap and retire (the
-      * round-4 epoch-lag bug that shrank the grace window to zero).
-      */
-    def mutateRetiring(
-        f: TableSnapshot => (TableSnapshot, Option[Retirees])): TableSnapshot = synchronized {
-      val (next, retirees) = f(current)
-      current = next
-      gc.onSwap(retirees.filterNot(_.isEmpty))
-      next
-    }
+  /** A column table (see [[VersionedTable]]); retirees release through
+    * [[BatchRegistry]]. The LRU budget is enforced after each write
+    * commit ([[enforceEviction]]), not on every swap.
+    */
+  final class StoreTable(name: String, initial: TableSnapshot)
+      extends VersionedTable[TableSnapshot, Retirees](name, initial,
+        r => BatchRegistry.release(r.batches, r.deltas, r.bitmaps), _.isEmpty) {
 
     def appendRefs(newRefs: Seq[BatchRef]): Unit =
       mutate(s => s.copy(refs = s.refs ++ newRefs))
@@ -912,8 +761,6 @@ object GraftColumnStore {
       }
       ()
     }
-
-    private[store] def flushRetired(): Unit = gc.flushAll()
   }
 
   private val tables = TrieMap.empty[String, StoreTable]
@@ -962,14 +809,6 @@ object GraftColumnStore {
     if (enabled) heapOverflowTables.put(name, ()) else heapOverflowTables.remove(name)
   def isHeapOverflow(name: String): Boolean = heapOverflowTables.contains(name)
 
-  /** EVICTION_BY 'LRUMEMSIZE n' + OVERFLOW 'true' enforcement (reference
-    * GemFire LRU-overflow regions): spill the table's least-recently-
-    * accessed sealed batches to the registry's disk tier until the
-    * resident payload fits the budget. Called after every write commit;
-    * scans fault spilled batches back in TRANSIENTLY (never re-cached).
-    * Also re-enforces the global heap-percent pool when the table
-    * participates in it.
-    */
   /** EXPIRE maintenance: drop every batch whose TTL has fully passed —
     * ONE atomic snapshot swap retiring the batches plus their attached
     * update deltas and delete bitmaps (payloads free once no reader
@@ -1003,6 +842,14 @@ object GraftColumnStore {
     removed
   }.getOrElse(0)
 
+  /** EVICTION_BY 'LRUMEMSIZE n' + OVERFLOW 'true' enforcement (reference
+    * GemFire LRU-overflow regions): spill the table's least-recently-
+    * accessed sealed batches to the registry's disk tier until the
+    * resident payload fits the budget. Called after every write commit;
+    * scans fault spilled batches back in TRANSIENTLY (never re-cached).
+    * Also re-enforces the global heap-percent pool when the table
+    * participates in it.
+    */
   def enforceEviction(name: String): Unit = {
     get(name).foreach { t =>
       val s = t.snapshot
@@ -1057,7 +904,7 @@ object GraftColumnStore {
         // refs are ALL sealed batches (isDelta only marks the partial
         // row-buffer seals, encoded identically) — sample them all
         val sampled = snap.refs.iterator
-          .flatMap(r => BatchRegistry.residentBatch(r.id))
+          .flatMap(r => BatchRegistry.peek(r.id))
           .take(8).toSeq
         sampled.nonEmpty &&
           sampled.count(_.columns(idx).isInstanceOf[DictColumn]) * 2 > sampled.size
@@ -1305,12 +1152,9 @@ object GraftColumnStore {
         i += 1
       }
       // containers: no run/dict scan — hashing whole vectors buys
-      // nothing, and generic map/struct rows lack stable value equality.
-      // -Dgraft.store.plainOnly=true is a dev probe knob (ScratchProbe)
-      // that skips the run/dict cost scan to attribute ingest time.
+      // nothing, and generic map/struct rows lack stable value equality
       val col =
-        if (isArray || isMap || structFields >= 0 ||
-          java.lang.Boolean.getBoolean("graft.store.plainOnly")) PlainColumn(out)
+        if (isArray || isMap || structFields >= 0) PlainColumn(out)
         else encode(out, dt)
       vals = new Array[Any](size)
       (col, ColumnStats(min, max, nulls, valueBloom = bloom))
@@ -1368,7 +1212,7 @@ object GraftColumnStore {
           }
         c += 1
       }
-      val id = BatchRegistry.putBatch(new StoreBatch(n, cols))
+      val id = BatchRegistry.put(new StoreBatch(n, cols))
       refs += BatchRef(id, bucketId, n, stats, isDelta,
         createdAtMs = StoreClock.nowMs)
       n = 0
@@ -1379,7 +1223,7 @@ object GraftColumnStore {
 
     /** Release everything this builder registered (task abort). */
     def abort(): Unit = {
-      BatchRegistry.release(refs.map(_.id), Nil)
+      BatchRegistry.release(refs.map(_.id))
       refs.clear()
       n = 0
     }

@@ -149,7 +149,7 @@ object GraftRowOps {
       // SPILLED pack from disk per call, so a per-row fetch would pay
       // O(rows x spilled packs) inflations
       val candidatePacks = candidates.map(ref =>
-        ref.id -> GraftRowStore.PackRegistry.pack(ref.id))
+        ref.id -> GraftRowStore.PackRegistry.get(ref.id))
       val tombstones = mutable.Map.empty[Long, mutable.BitSet]
       val buf = mutable.ArrayBuffer.empty[org.apache.spark.sql.catalyst.InternalRow]
       val newRefs = mutable.ArrayBuffer.empty[GraftRowStore.PackRef]
@@ -224,7 +224,7 @@ object GraftRowOps {
       val candidates = if (bucketed) refsByBucket.getOrElse(pid, Vector.empty) else allRefs
       // pack resolution hoisted out of the row loop — see put()
       val candidatePacks = candidates.map(ref =>
-        ref.id -> GraftRowStore.PackRegistry.pack(ref.id))
+        ref.id -> GraftRowStore.PackRegistry.get(ref.id))
       val tombstones = mutable.Map.empty[Long, mutable.BitSet]
       it.foreach { r =>
         val key = GraftRowStore.keyOf(r, keyOrds, keyTypes)
@@ -337,7 +337,7 @@ object GraftRowOps {
             GraftRowStore.SortedSlotRegistry.sortedSlots(pid, column, ordinal, dt)
           if (nonNull == 0) (pid, null: Any, null: Any)
           else {
-            val rows = GraftRowStore.PackRegistry.pack(pid).rows
+            val rows = GraftRowStore.PackRegistry.get(pid).rows
             (pid, rows(slots(0)).get(ordinal, dt),
               rows(slots(nonNull - 1)).get(ordinal, dt))
           }

@@ -486,7 +486,7 @@ class GraftRowReaderFactory(fullSchema: StructType, required: StructType,
         val ord = org.apache.spark.sql.catalyst.util.TypeUtils
           .getInterpretedOrdering(p.dt)
         p.refs.iterator.flatMap { ref =>
-          val rows = GraftRowStore.PackRegistry.pack(ref.id).rows
+          val rows = GraftRowStore.PackRegistry.get(ref.id).rows
           // rows passed through so a sorted-slot cache miss does not
           // deserialize the same (possibly spilled) pack a second time
           val (slots, nonNull) = GraftRowStore.SortedSlotRegistry
@@ -530,7 +530,7 @@ class GraftRowReaderFactory(fullSchema: StructType, required: StructType,
       tombstones: Map[Long, BitSet],
       project: (Long, Int, InternalRow) => InternalRow): Iterator[InternalRow] =
     refs.iterator.flatMap { ref =>
-      val pack = GraftRowStore.PackRegistry.pack(ref.id)
+      val pack = GraftRowStore.PackRegistry.get(ref.id)
       val dead = tombstones.getOrElse(ref.id, BitSet.empty)
       Iterator.range(0, pack.numRows)
         .filterNot(dead.contains)
@@ -643,10 +643,10 @@ class GraftRowWriterFactory(schema: StructType, keyColumns: Seq[String], buckete
         else if (bucketed) existing.getOrElse(bucketId, Vector.empty)
         else existing.values.flatten.toVector
       // packs resolved ONCE per writer task: a spilled pack deserializes
-      // from disk on every PackRegistry.pack call, so the per-record
+      // from disk on every PackRegistry.get call, so the per-record
       // PK-collision probe must not fetch per row
       private lazy val collidablePacks: Vector[(Long, GraftRowStore.RowPack)] =
-        collidable.map(r => r.id -> GraftRowStore.PackRegistry.pack(r.id))
+        collidable.map(r => r.id -> GraftRowStore.PackRegistry.get(r.id))
       private val buf = ArrayBuffer.empty[InternalRow]
       private val refs = ArrayBuffer.empty[GraftRowStore.PackRef]
 

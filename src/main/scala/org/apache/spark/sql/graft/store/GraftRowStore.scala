@@ -22,19 +22,23 @@ import scala.collection.immutable.BitSet
   * matching addresses (reference: PK lookups route to one bucket region
   * and do a region get).
   *
-  * Layout mirrors [[GraftColumnStore]]'s executor-resident design:
+  * Layout shares [[GraftColumnStore]]'s executor-resident substrate:
   *  - pack payloads (rows + index) live in [[GraftRowStore.PackRegistry]],
-  *    written directly by tasks; commit messages and snapshots carry only
-  *    [[GraftRowStore.PackRef]]s (ids + counts) — metadata, never data.
-  *    On a cluster the registry maps to node-local bucket regions and the
-  *    planning-time index probe becomes the routed get RPC.
-  *  - a table is an immutable [[GraftRowStore.RowSnapshot]] swapped
-  *    atomically: pack refs + per-pack tombstone bitmaps. EVERY mutation
-  *    is tombstone + append (update = tombstone old version + append new),
-  *    so packs and their indexes are never rewritten in place and a scan's
-  *    captured snapshot stays consistent (snapshot isolation). With the
-  *    primary-key invariant (at most one live row per key) enforced by the
-  *    write paths, "latest version" needs no timestamps.
+  *    a [[PayloadRegistry]] (the same LRU disk-overflow tier as the
+  *    column store's batches), written directly by tasks; commit messages
+  *    and snapshots carry only [[GraftRowStore.PackRef]]s (ids + counts)
+  *    — metadata, never data. On a cluster the registry maps to
+  *    node-local bucket regions and the planning-time index probe becomes
+  *    the routed get RPC.
+  *  - a table is a [[VersionedTable]], like a column table: an
+  *    immutable [[GraftRowStore.RowSnapshot]] (pack refs + per-pack
+  *    tombstone bitmaps) swapped atomically under reader-lease GC. EVERY
+  *    mutation is tombstone + append (update = tombstone old version +
+  *    append new), so packs and their indexes are never rewritten in
+  *    place and a scan's captured snapshot stays consistent (snapshot
+  *    isolation). With the primary-key invariant (at most one live row
+  *    per key) enforced by the write paths, "latest version" needs no
+  *    timestamps.
   */
 object GraftRowStore {
 
@@ -78,103 +82,20 @@ object GraftRowStore {
     RowKey(vs.toSeq)
   }
 
-  /** Process-wide payload tier (executor-resident; see class doc).
-    * Carries the same LRU disk-overflow tier as the column store's
-    * BatchRegistry (EVICTION_BY 'LRUMEMSIZE n' + OVERFLOW 'true'): spilled
-    * packs live as LZ4-deflated serialized files and fault back
-    * TRANSIENTLY per access — hot packs (point-lookup working set) stay
-    * resident by LRU, cold ones pay a disk read. Sizes are estimated
-    * lazily and memoized (packs are immutable).
+  /** Process-wide payload tier (executor-resident; see class doc) — a
+    * [[PayloadRegistry]], so packs share the column store's LRU disk
+    * overflow: hot packs (the point-lookup working set) stay resident by
+    * LRU, cold ones fault back transiently per access.
     */
-  object PackRegistry {
-    private val nextId = new AtomicLong(0)
-    private val packs = TrieMap.empty[Long, RowPack]
-    private val spilledFiles = TrieMap.empty[Long, java.nio.file.Path]
-    private val packSizes = TrieMap.empty[Long, Long]
-    private val accessTick = new AtomicLong
-    private val lastAccess = TrieMap.empty[Long, Long]
-    private lazy val spillDir =
-      SpillSweep.registeredTempDir("graft-row-overflow-", "graft-row-spill-sweep")
-
-    def put(p: RowPack): Long = {
-      val id = nextId.incrementAndGet()
-      packs.put(id, p)
-      lastAccess.put(id, accessTick.incrementAndGet())
-      id
-    }
-    def pack(id: Long): RowPack = {
-      // touch AFTER the hit (see BatchRegistry.batch) — and note per-ROW
-      // probe loops must hoist pack() out of the loop (a spilled pack
-      // deserializes per call); see resolvePacks below
-      packs.get(id) match {
-        case Some(p) =>
-          lastAccess.put(id, accessTick.incrementAndGet())
-          p
-        case None => spilledFiles.get(id) match {
-          case Some(path) =>
-            lastAccess.put(id, accessTick.incrementAndGet())
-            val in = new java.io.ObjectInputStream(new net.jpountz.lz4.LZ4BlockInputStream(
-              java.nio.file.Files.newInputStream(path)))
-            try in.readObject().asInstanceOf[RowPack] finally in.close()
-          case None =>
-            throw new IllegalStateException(s"graftrow pack payload missing: $id")
-        }
-      }
-    }
+  object PackRegistry extends PayloadRegistry[RowPack](
+      "graftrow pack", p => org.apache.spark.util.SizeEstimator.estimate(p.rows),
+      "graft-row-overflow-", "pack") {
     /** Fetch a set of packs ONCE for a task-scoped loop: per-row probe
-      * loops must not call [[pack]] per row — a spilled pack would
+      * loops must not call [[get]] per row — a spilled pack would
       * deserialize from disk on every call.
       */
     def resolvePacks(ids: Iterable[Long]): Map[Long, RowPack] =
-      ids.map(id => id -> pack(id)).toMap
-    def isResident(id: Long): Boolean = packs.contains(id)
-    def residentBytes(id: Long): Long =
-      if (packs.contains(id)) sizeBytes(id) else 0L
-    def sizeBytes(id: Long): Long = packSizes.get(id) match {
-      case Some(s) => s
-      case None =>
-        packs.get(id) match {
-          case Some(p) =>
-            val s = org.apache.spark.util.SizeEstimator.estimate(p.rows)
-            packSizes.put(id, s)
-            s
-          case None => 0L
-        }
-    }
-    def spill(id: Long): Unit = synchronized {
-      packs.get(id).foreach { p =>
-        packSizes.put(id, sizeBytes(id)) // pin before the payload leaves heap
-        val path = spillDir.resolve(s"pack-$id.lz4")
-        val out = new java.io.ObjectOutputStream(new net.jpountz.lz4.LZ4BlockOutputStream(
-          java.nio.file.Files.newOutputStream(path)))
-        try out.writeObject(p) finally out.close()
-        spilledFiles.put(id, path)
-        packs.remove(id)
-      }
-    }
-    /** LRU eviction over `ids` until resident total ≤ `budgetBytes`. */
-    def enforceBudget(ids: Seq[Long], budgetBytes: Long): Unit = {
-      var resident = ids.map(residentBytes).sum
-      if (resident <= budgetBytes) return
-      val lru = ids.filter(isResident).sortBy(id => lastAccess.getOrElse(id, 0L))
-      var i = 0
-      while (resident > budgetBytes && i < lru.length) {
-        val id = lru(i)
-        val sz = residentBytes(id)
-        spill(id)
-        resident -= sz
-        i += 1
-      }
-    }
-    // synchronized WITH spill() — see BatchRegistry.release
-    def release(ids: Iterable[Long]): Unit = synchronized {
-      ids.foreach { id =>
-        packs.remove(id)
-        packSizes.remove(id)
-        lastAccess.remove(id)
-        spilledFiles.remove(id).foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
-    }
+      ids.map(id => id -> this.get(id)).toMap
   }
 
   /** Metadata-only handle — what commits and snapshots carry. */
@@ -182,7 +103,7 @@ object GraftRowStore {
     * the column store's BatchRef analog).
     */
   final case class PackRef(id: Long, bucketId: Int, numRows: Int,
-      createdAtMs: Long = 0L) extends Serializable
+      createdAtMs: Long = 0L) extends SealedRef with Serializable
 
   /** Secondary-index metadata (reference SnappySession.createIndex:1760 —
     * B-tree indexes on arbitrary row-table columns). Split by tier like
@@ -215,7 +136,7 @@ object GraftRowStore {
       cache.getOrElseUpdate((packId, column), {
         // caller-supplied rows avoid re-deserializing a spilled pack the
         // call site already fetched
-        val rows = knownRows.getOrElse(PackRegistry.pack(packId).rows)
+        val rows = knownRows.getOrElse(PackRegistry.get(packId).rows)
         val ord = org.apache.spark.sql.catalyst.util.TypeUtils
           .getInterpretedOrdering(dt)
         val (nonNull, nulls) =
@@ -240,20 +161,7 @@ object GraftRowStore {
       tombstones: Map[Long, BitSet],
       indexes: Map[String, IndexStats] = Map.empty,
       evictionBudget: Long = 0L,
-      expireSeconds: Long = 0L) {
-    /** Pack-granularity TTL (EXPIRE, reference row-region timeToLive):
-      * a pack expires once its NEWEST row exceeds the TTL.
-      */
-    def isExpired(ref: PackRef, nowMs: Long): Boolean =
-      expireSeconds > 0 && ref.createdAtMs > 0 &&
-        nowMs - ref.createdAtMs > expireSeconds * 1000L
-    /** Packs with rows inside the TTL — what every read/mutation-
-      * addressing path enumerates (expired rows are invisible, so they
-      * can be neither scanned, point-looked-up, updated nor deleted).
-      */
-    def liveRefs: Vector[PackRef] =
-      if (expireSeconds <= 0) refs
-      else { val now = StoreClock.nowMs; refs.filterNot(isExpired(_, now)) }
+      expireSeconds: Long = 0L) extends StoreSnapshot[PackRef] {
     def rowCount: Long =
       liveRefs.map(r => r.numRows.toLong - tombstones.get(r.id).map(_.size).getOrElse(0)).sum
     def keyOrdinals: Array[Int] = keyColumns.map(schema.fieldIndex).toArray
@@ -266,7 +174,7 @@ object GraftRowStore {
     def probe(key: RowKey, candidates: Seq[PackRef],
         resolved: Map[Long, RowPack] = Map.empty): Option[(Long, Int)] = {
       candidates.foreach { r =>
-        val idx = resolved.getOrElse(r.id, PackRegistry.pack(r.id)).index
+        val idx = resolved.getOrElse(r.id, PackRegistry.get(r.id)).index
         if (idx != null) {
           val slot = idx.get(key)
           if (slot != null && !tombstones.get(r.id).exists(_.contains(slot)))
@@ -277,41 +185,20 @@ object GraftRowStore {
     }
   }
 
-  final class RowTable(val name: String, initial: RowSnapshot) {
-    @volatile private var current: RowSnapshot = initial
-    def snapshot: RowSnapshot = current
-    def schema: StructType = current.schema
+  /** A row table (see [[VersionedTable]]); retired packs release with
+    * their sorted-slot arrays.
+    */
+  final class RowTable(name: String, initial: RowSnapshot)
+      extends VersionedTable[RowSnapshot, Seq[Long]](name, initial, releasePacks, _.isEmpty) {
 
-    // Reader-lease payload GC (see [[LeaseGc]] and the column-store
-    // analog): superseded packs stay resolvable while any scan pinned to
-    // an older snapshot is still reachable.
-    private val gc = new LeaseGc[Seq[Long]](packs => {
-      PackRegistry.release(packs)
-      SortedSlotRegistry.release(packs)
-    })
-
-    def pinSnapshot(): (RowSnapshot, Long) = synchronized { (current, gc.pin()) }
-    def addLeaseOwner(leaseId: Long, owner: AnyRef): Unit = gc.addOwner(leaseId, owner)
-    def gcStats: (Int, Int) = gc.stats
-
-    def mutate(f: RowSnapshot => RowSnapshot): RowSnapshot =
-      mutateRetiring { s => (f(s), None) }
-
-    /** Snapshot swap + retiree recording in one critical section. Every
-      * swap re-enforces the LRU-overflow budget (no-op when disabled) so
-      * appends, upserts and tombstone merges all keep the resident set
-      * within EVICTION_BY's cap.
+    /** Every swap re-enforces the LRU-overflow budget (no-op when
+      * disabled) so appends, upserts and tombstone merges all keep the
+      * resident set within EVICTION_BY's cap.
       */
-    def mutateRetiring(
-        f: RowSnapshot => (RowSnapshot, Option[Seq[Long]])): RowSnapshot = synchronized {
-      val (next, retirees) = f(current)
-      current = next
-      gc.onSwap(retirees.filterNot(_.isEmpty))
+    override protected def afterSwap(next: RowSnapshot): Unit =
       if (next.evictionBudget > 0L) {
         PackRegistry.enforceBudget(next.refs.map(_.id), next.evictionBudget)
       }
-      next
-    }
 
     def appendRefs(newRefs: Seq[PackRef]): Unit =
       mutate(s => s.copy(refs = s.refs ++ newRefs))
@@ -383,8 +270,6 @@ object GraftRowStore {
       }
       ()
     }
-
-    private[store] def flushRetired(): Unit = gc.flushAll()
   }
 
   private val tables = TrieMap.empty[String, RowTable]
@@ -437,9 +322,13 @@ object GraftRowStore {
     tables.remove(name).foreach(releaseAll)
   }
 
+  private def releasePacks(ids: Seq[Long]): Unit = {
+    PackRegistry.release(ids)
+    SortedSlotRegistry.release(ids)
+  }
+
   private def releaseAll(t: RowTable): Unit = {
     t.flushRetired()
-    PackRegistry.release(t.snapshot.refs.map(_.id))
-    SortedSlotRegistry.release(t.snapshot.refs.map(_.id))
+    releasePacks(t.snapshot.refs.map(_.id))
   }
 }

@@ -122,7 +122,7 @@ class GraftStoreSpec extends SparkTestBase {
     g.createTable("s_dec", dec, keyColumns = Seq("l_orderkey", "l_linenumber"))
     assert(g.isStoreBacked("s_dec"), "decimal schema must not fall back to cached DF")
     val snap = GraftColumnStore("s_dec").snapshot
-    val batch = GraftColumnStore.BatchRegistry.batch(snap.refs.head.id)
+    val batch = GraftColumnStore.BatchRegistry.get(snap.refs.head.id)
     assert(batch.columns(2).isInstanceOf[GraftColumnStore.DecimalColumn],
       s"price must use the scaled-long decimal encoding, got ${batch.columns(2).getClass}")
     // exact roundtrip: decimal sums are exact integers in cents
@@ -663,7 +663,7 @@ class GraftStoreSpec extends SparkTestBase {
     assert(zipped.sizeBytes < plain.sizeBytes,
       s"lz4 snapshot ${zipped.sizeBytes}B must undercut plain ${plain.sizeBytes}B")
     val some = zipped.refs.flatMap(r =>
-      GraftColumnStore.BatchRegistry.batch(r.id).columns.collect {
+      GraftColumnStore.BatchRegistry.get(r.id).columns.collect {
         case c: GraftColumnStore.CompressedColumn => c
       })
     assert(some.nonEmpty, "at least one sealed column should be CompressedColumn")
@@ -686,7 +686,7 @@ class GraftStoreSpec extends SparkTestBase {
     val after = GraftColumnStore("s_lz4").snapshot
     assert(after.compression == "lz4")
     assert(after.refs.flatMap(r =>
-      GraftColumnStore.BatchRegistry.batch(r.id).columns.collect {
+      GraftColumnStore.BatchRegistry.get(r.id).columns.collect {
         case c: GraftColumnStore.CompressedColumn => c
       }).nonEmpty, "compaction must re-deflate sealed columns")
     assert(g.table("s_lz4").groupBy("lang").count().orderBy("lang").collect().toSeq == expect)
@@ -731,7 +731,13 @@ class GraftStoreSpec extends SparkTestBase {
     assert(g.table("s_evict").groupBy("l_returnflag")
       .agg(sum(col("l_quantity")).as("q")).orderBy("l_returnflag")
       .collect().toSeq == expect2)
+    // drop releases every spilled batch, the pre-compaction ones too
+    val reg = GraftColumnStore.BatchRegistry
+    val ids = (snap.refs ++ after.refs).map(_.id).distinct
+    assert(ids.exists(id => java.nio.file.Files.exists(reg.spillPath(id))))
     g.dropTable("s_evict")
+    assert(ids.forall(id => !java.nio.file.Files.exists(reg.spillPath(id))),
+      "no spill file of a dropped table may remain")
   }
 
   test("EVICTION_BY in DDL: LRUMEMSIZE+OVERFLOW honored, other policies stay ignored") {

@@ -299,6 +299,12 @@ class RowTableSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // budget still enforced after the upsert's mutation swap
     val after = GraftRowStore("r_evict").snapshot
     assert(after.refs.map(r => GraftRowStore.PackRegistry.residentBytes(r.id)).sum <= 4000L)
+    // drop releases every spilled pack, the upsert-retired ones too
+    val reg = GraftRowStore.PackRegistry
+    val ids = (snap.refs ++ after.refs).map(_.id).distinct
+    assert(ids.exists(id => java.nio.file.Files.exists(reg.spillPath(id))))
     g.dropTable("r_evict")
+    assert(ids.forall(id => !java.nio.file.Files.exists(reg.spillPath(id))),
+      "no spill file of a dropped table may remain")
   }
 }
