@@ -1099,7 +1099,7 @@ class GraftSession(val spark: SparkSession)
   /** CREATE MATERIALIZED VIEW — materialize a grouped aggregate over one
     * store table into its own bucketed store table (bucketed AND keyed
     * by the group columns: rollup re-aggregation co-locates, and the
-    * incremental refresh merges through the keyed-upsert path). The
+    * incremental refresh merges through the keyed-merge path). The
     * optimizer substitutes the view for matching aggregates while the
     * freshness fingerprint proves it current — see
     * [[org.apache.spark.sql.graft.store.MatViewRewrite]].
@@ -1116,32 +1116,61 @@ class GraftSession(val spark: SparkSession)
       s"CREATE MATERIALIZED VIEW $nm: name in use")
     val analyzed = spark.sql(viewSql).queryExecution.analyzed
     val d = MatViewSupport.analyzeDefinition(analyzed)
-    val base = d.tables.head._1
+    val tables = d.tables.map(_._1)
     // fingerprint BEFORE the pinned scan: concurrent mutations can only
     // make the view conservatively stale, never falsely fresh —
     // per-table for join views, a mutation in ANY member stales
-    val freshAll: Map[String, MatViews.MvFreshness] = d.tables.map { case (t, _) =>
-      t -> MatViews.fingerprint(GraftColumnStore(t).snapshot)
-    }.toMap
-    val contents = mvContents(d.tables.map(_._1), d.joinConds,
-      freshAll.view.mapValues(_.refIds).toMap, d.groupCols, d.groupQual,
-      d.aggs, d.predicate)
-    val df = MatViews.inMaintenance {
-      createTable(nm, contents, keyColumns = d.groupCols,
-        partitionBy = d.groupCols, buckets = buckets)
+    val fresh = fingerprints(tables)
+    val joins = if (tables.size > 1)
+      Some(MatViews.MvJoin(tables.sorted, d.joinConds, fresh)) else None
+    materializeView(MatViews.MvDef(nm, tables.head, d.groupCols, d.aggs,
+        viewSql, fresh(tables.head), d.predicate, joins, d.groupQual), fresh,
+      mvContents(tables, d.joinConds, pinnedIds(fresh), d.groupCols,
+        d.groupQual, d.aggs, d.predicate), buckets)
+  }
+
+  private def fingerprints(tables: Seq[String]): Map[String, MatViews.MvFreshness] =
+    tables.map(t => t -> MatViews.fingerprint(GraftColumnStore(t).snapshot)).toMap
+
+  private def pinnedIds(fresh: Map[String, MatViews.MvFreshness]): Map[String, Set[Long]] =
+    fresh.map { case (t, f) => t -> f.refIds }
+
+  /** Did any table move since `fresh` was captured (or vanish)? Payload
+    * ids never recycle, so `false` proves no mutation committed in
+    * between — the re-proof that sandwiches a scan's snapshot pin.
+    */
+  private def mutatedSince(fresh: Map[String, MatViews.MvFreshness]): Boolean =
+    fresh.exists { case (t, f) =>
+      GraftColumnStore.get(t).forall(s => MatViews.fingerprint(s.snapshot) != f)
     }
-    val joins = if (d.tables.size > 1) Some(MatViews.MvJoin(
-      d.tables.map(_._1).sorted, d.joinConds, freshAll)) else None
-    // post-build re-proof (same sandwich as refresh): a mutation racing
-    // the build scan leaves content the captured fingerprint does not
-    // describe — register DIRTY so the first refresh rebuilds instead
-    // of running a delta path against an untrustworthy record
-    val raced = d.tables.exists { case (t, _) =>
-      GraftColumnStore.get(t).forall(s =>
-        MatViews.fingerprint(s.snapshot) != freshAll(t))
-    }
-    MatViews.register(MatViews.MvDef(nm, base, d.groupCols, d.aggs, viewSql,
-      freshAll(base), d.predicate, joins, d.groupQual, dirty = raced))
+
+  /** `mv` recorded at freshness `fresh`. */
+  private def recordedAt(mv: MatViews.MvDef, fresh: Map[String, MatViews.MvFreshness],
+      dirty: Boolean): MatViews.MvDef =
+    mv.copy(fresh = fresh(mv.base), joins = mv.joins.map(_.copy(fresh = fresh)),
+      dirty = dirty)
+
+  /** The one build step of create, rebuild and the global fold: write
+    * `contents` — read at freshness `fresh` — as `mv`'s backing table,
+    * then register `mv` at `fresh`. createTable's supersede rule
+    * unregisters the view up front, so a FAILED build restores the old
+    * registration (still stale, so it never serves) and rethrows rather
+    * than leave the view silently vanished. The post-build re-proof
+    * registers DIRTY when a mutation raced the build: the content no
+    * longer pairs provably with `fresh`, so the view is stale to the
+    * rewrite and the next refresh rebuilds instead of running a delta
+    * path against an untrustworthy record.
+    */
+  private def materializeView(mv: MatViews.MvDef,
+      fresh: Map[String, MatViews.MvFreshness], contents: DataFrame,
+      buckets: Int): DataFrame = {
+    val nm = mv.name
+    val previous = MatViews.get(nm)
+    val df = try MatViews.inMaintenance {
+      createTable(nm, contents, keyColumns = mv.groupCols,
+        partitionBy = mv.groupCols, buckets = buckets)
+    } catch { case e: Throwable => previous.foreach(MatViews.register); throw e }
+    MatViews.register(recordedAt(mv, fresh, dirty = mutatedSince(fresh)))
     df
   }
 
@@ -1258,68 +1287,47 @@ class GraftSession(val spark: SparkSession)
   }
 
 
-  /** REFRESH MATERIALIZED VIEW — O(delta) after pure appends (aggregate
-    * only the new batches, merge by group key through putInto), after
-    * deletes (SUBTRACTIVE refresh — first AND repeat deletes), and
-    * after updates (two-sided subtract-old/add-new refresh); when
-    * subtraction's algebra declines — or the move MIXES updates and
-    * deletes — a GROUP-PRUNED partial rebuild re-aggregates only the
-    * affected groups; anything else — a changed batch SET (appends mixed
-    * with mutations, emptied batches, compaction), TTL-expiry, a
-    * mutating table among several movers — full rebuild. SEVERAL tables
-    * that each moved by pure appends compose telescopically (one
-    * O(delta) term per mover, see [[telescopedAppendDeltas]]) —
-    * "incremental_multi". GLOBAL views (no GROUP BY) hold one summary
-    * row and fold the same signed deltas into it without a keyed merge.
-    * Returns the path taken:
-    * "noop" | "incremental" | "incremental_multi" | "incremental_delete" |
+  /** REFRESH MATERIALIZED VIEW. Returns the path taken: "noop" |
+    * "incremental" | "incremental_multi" | "incremental_delete" |
     * "incremental_update" | "partial" | "full".
     *
-    * SUBTRACTIVE path conditions (single-table AND join views — for a
-    * join view exactly ONE member table moved, from either side: the
-    * vanished join rows are its deleted rows ⋈ the other,
-    * fingerprint-identical tables): the moving table's batch set is
-    * UNCHANGED (a delete that empties a whole batch drops it from the
-    * store, and the vanished payload's rows cannot be re-read) and its
-    * only moved state is delete bitmaps. A batch with NO recorded
-    * bitmap reads its whole current bitmap as the delta; a batch WITH
-    * one (repeat delete) reads current-minus-recorded — the recorded
-    * payload is PINNED by MatViews.register against the GC that the
-    * superseding union swap would otherwise trigger, and resolves
-    * task-side as an exclude mask. Every aggregate must be
-    * algebraically invertible (sum/count/count(*)/avg — min/max/HLL
-    * cannot un-see a value); the view carries a count(*) slot
-    * (group-emptiness detection); and every sum/avg input column is
-    * NON-NULLABLE in the base schema (otherwise removing the last
-    * non-null value would need to flip the stored sum to NULL, which
-    * subtraction cannot know). The delta is a `deleted_rows`
-    * maintenance scan of exactly the moved batches, filtered by the
-    * view predicate, aggregated, and SUBTRACTED from the touched
-    * summary rows through putInto; groups whose count reaches 0 stay as
-    * zero rows that the rewrite masks (`__gN_cnt > 0`) until the next
-    * rebuild compacts them — so the merge never needs a driver-side key
-    * collect, keeping the path O(delta) at any group cardinality.
+    * The O(delta) paths fold SIGNED DELTA TERMS into the stored summary.
+    * A term is the view's defining aggregate over a maintenance read of
+    * what moved since the recorded fingerprint:
+    *  - appends ADD: one term per appending table over its new batches
+    *    (several appending tables compose telescopically, see
+    *    [[telescopedAppendDeltas]]) — "incremental" for one mover,
+    *    "incremental_multi" for several; any aggregate mix.
+    *  - deletes SUBTRACT: a `deleted_rows` read of the moved batches that
+    *    yields only rows tombstoned since the recorded bitmap (its payload
+    *    is pinned by MatViews.register and resolves as an exclude mask)
+    *    — "incremental_delete".
+    *  - updates add their NEW values and subtract their OLD ones: two
+    *    `updated_rows` reads of the rows addressed by deltas outside the
+    *    recorded set — "incremental_update". A row moved between groups,
+    *    or across the view predicate, nets right on both sides.
+    * Subtraction needs ONE moving table (either side of a join view —
+    * the other tables are fingerprint-identical) whose batch set is
+    * unchanged and which moved only bitmaps or only deltas; every
+    * aggregate invertible (sum/count/count(*)/avg — min/max/HLL cannot
+    * un-see a value); a count(*) slot, so an emptied group stays as a
+    * zero row the rewrite masks (`__gN_cnt > 0`) until a rebuild
+    * compacts it; and non-nullable sum/avg inputs (removing the last
+    * non-null value would have to flip the sum to NULL).
     *
-    * UPDATE path (same invertibility gate): the moving table's batch
-    * set AND bitmaps are unchanged, its only moved state is update
-    * deltas that GREW (recorded ids ⊆ current ids — deltas only append
-    * between compactions). Two `updated_rows` maintenance reads of the
-    * moved batches — rows addressed by the NEW deltas valued "old"
-    * (recorded delta set) and "new" (current) — aggregate through the
-    * view shape; old negates, the union sum-merges into the touched
-    * summary rows. A row whose update moved it BETWEEN groups subtracts
-    * from its old group and adds to its new one, including groups the
-    * view has never seen (putInto inserts them).
+    * A keyed view merges the terms by group key in the store
+    * ([[GraftStoreOps.mergeInto]]); a global view (no GROUP BY) folds
+    * them into its one stored row. A NULL group key, or a mutation
+    * racing the delta scan, falls back to the full rebuild.
     *
-    * PARTIAL rebuild (delete-only or update-only move, any aggregate
-    * mix): the affected group keys — from the tombstoned rows (a
-    * superset of newly-tombstoned is fine: re-aggregating an
-    * already-correct group is idempotent) or the updated rows' old+new
-    * sides — restrict a re-aggregate of the CURRENT base via a
-    * left-semi join (broadcast + dynamic partition pruning keep the
-    * base scan bounded); refreshed groups merge through putInto and
-    * groups that vanished entirely delete by key. O(affected groups'
-    * data), never O(table).
+    * Without signed terms, a keyed view with one moving table and an
+    * unchanged batch set takes the GROUP-PRUNED partial rebuild:
+    * re-aggregate only the affected groups from the current base, replace
+    * them by key and delete the groups that vanished — O(affected groups'
+    * data); it demotes to full when the touched keys cannot prune the
+    * base scan. Everything else rebuilds in full: a changed batch set
+    * (appends mixed with mutations, emptied batches, compaction, TTL
+    * expiry), a mutating table among several movers, a DIRTY record.
     */
   def refreshMaterializedView(name: String): String =
       MatViews.withMaintenanceLock(normalize(name)) {
@@ -1349,25 +1357,36 @@ class GraftSession(val spark: SparkSession)
       f.refIds.subsetOf(freshNow(t).refIds) &&
         snaps(t).mutationState(f.refIds) == f.fp
     }
-    def registered(): MatViews.MvDef = mv.copy(
-      fresh = freshNow(mv.base),
-      joins = mv.joins.map(_.copy(fresh = freshNow)),
-      dirty = false)
+    val conds = mv.joins.map(_.conds).getOrElse(Nil)
+    val ids = pinnedIds(freshNow)
+    val storage = mvStorageNames(mv.aggs)
+    def contents(pinned: Map[String, Set[Long]],
+        special: Option[(String, MvTableRead)] = None): DataFrame =
+      mvContents(tables, conds, pinned, mv.groupCols, mv.groupQual, mv.aggs,
+        mv.predicate, special)
+    def negate(df: DataFrame): DataFrame =
+      storage.foldLeft(df)((d, n) => d.withColumn(n, -col(n)))
+    // NULL group keys defeat the keyed semi-join / merge / deleteKeys —
+    // correctness wins: the caller rebuilds
+    def hasNullKey(df: DataFrame): Boolean =
+      df.filter(mv.groupCols.map(col(_).isNull).reduce(_ || _)).take(1).nonEmpty
     // signed-delta safety: a base mutation committing between the
     // freshNow capture above and a delta scan's snapshot pin would make
     // the delta disagree with the fingerprint this refresh RECORDS —
     // the next refresh would then re-apply part of it (double-subtract /
     // double-add) and, fingerprint finally matching, SERVE the corrupt
-    // summary. Checked AFTER the delta materializes: payload ids never
-    // recycle, so fingerprint(t2) == fingerprint(t0) proves no mutation
-    // committed in [t0, t2], sandwiching the scan's pin at t1. On a
-    // race the caller falls back to rebuild(), whose re-aggregation is
-    // idempotent against current truth (a stale-fingerprint rebuild
-    // never serves and the next refresh converges).
-    def racedMutation(): Boolean = tables.exists { t =>
-      GraftColumnStore.get(t).forall(s =>
-        MatViews.fingerprint(s.snapshot) != freshNow(t))
-    }
+    // summary. Checked AFTER the delta materializes, sandwiching the
+    // scan's pin (see mutatedSince). On a race the caller falls back to
+    // rebuild(), whose re-aggregation is idempotent against current
+    // truth (a stale-fingerprint rebuild never serves and the next
+    // refresh converges).
+    def racedMutation(): Boolean = mutatedSince(freshNow)
+    // buckets from the backing table's OWN snapshot, not session state:
+    // a JDBC/other session may refresh a view it didn't create
+    // (captured BEFORE the rewrite: a failed createTable drops the old
+    // table, and the retry must still know the layout)
+    def viewBuckets: Int =
+      math.max(GraftColumnStore.get(nm).map(_.snapshot.numBuckets).getOrElse(32), 1)
     def rebuild(): String = {
       // freshness RE-CAPTURED at rebuild start: rebuild is also the
       // fallback when freshNow itself was raced (racedMutation), and
@@ -1375,36 +1394,8 @@ class GraftSession(val spark: SparkSession)
       // older freshNow over newer content would hand the next refresh's
       // delta paths (which now trust recorded bitmaps/deltas) a
       // fingerprint that no longer describes the stored rows
-      val fresh2 = tables.map(t =>
-        t -> MatViews.fingerprint(GraftColumnStore(t).snapshot)).toMap
-      val contents = mvContents(tables, mv.joins.map(_.conds).getOrElse(Nil),
-        fresh2.view.mapValues(_.refIds).toMap, mv.groupCols, mv.groupQual,
-        mv.aggs, mv.predicate)
-      // buckets from the backing table's OWN snapshot, not session
-      // state: a JDBC/other session may refresh a view it didn't create
-      // (captured BEFORE the rewrite: a failed createTable drops the
-      // old table, and the retry must still know the layout)
-      val buckets = math.max(
-        GraftColumnStore.get(nm).map(_.snapshot.numBuckets).getOrElse(32), 1)
-      // createTable's supersede rule unregisters the view up front — a
-      // FAILED rebuild must not leave it silently vanished (no guard, no
-      // sys.matviews row, retry refused): restore the old registration
-      // (still stale, so it never serves) and rethrow
-      try MatViews.inMaintenance {
-        createTable(nm, contents, keyColumns = mv.groupCols,
-          partitionBy = mv.groupCols, buckets = buckets)
-      } catch { case e: Throwable => MatViews.register(mv); throw e }
-      // post-build re-proof (the racedMutation sandwich, against the
-      // rebuild's OWN capture): on a race the content/fingerprint
-      // pairing is unprovable — register DIRTY, which is stale to the
-      // rewrite AND forces the next refresh to rebuild instead of
-      // running a delta path against an untrustworthy fingerprint
-      val raced = tables.exists(t => GraftColumnStore.get(t).forall(s =>
-        MatViews.fingerprint(s.snapshot) != fresh2(t)))
-      MatViews.register(mv.copy(
-        fresh = fresh2(mv.base),
-        joins = mv.joins.map(_.copy(fresh = fresh2)),
-        dirty = raced))
+      val fresh = fingerprints(tables)
+      materializeView(mv, fresh, contents(pinnedIds(fresh)), viewBuckets)
       "full"
     }
     // ONE fingerprint-diff walk classifies the moving table: the moved
@@ -1479,87 +1470,6 @@ class GraftSession(val spark: SparkSession)
         case "sum" | "avg" => nonNullable(a.input)
         case _ => false // min/max/approx_distinct cannot un-see a value
       })
-    }
-    def subtractiveRefresh(movingT: String, movedIds: Set[Long],
-        excludes: Map[Long, Long]): String = {
-      // vanished rows: the moving table's newly-deleted rows (current
-      // bitmap minus the recorded exclude mask), joined (for join
-      // views) to the OTHER tables — fingerprint-identical, so the
-      // pairs are exactly the join rows that no longer exist; the view
-      // predicate filters rows that never contributed
-      val delta = mvContents(tables, mv.joins.map(_.conds).getOrElse(Nil),
-        freshNow.view.mapValues(_.refIds).toMap, mv.groupCols, mv.groupQual,
-        mv.aggs, mv.predicate,
-        special = Some((movingT, MvDeletedRead(movedIds, excludes))))
-        .localCheckpoint(false)
-      // NULL group keys defeat the keyed merge — correctness wins
-      if (delta.filter(mv.groupCols.map(col(_).isNull)
-          .reduce(_ || _)).take(1).nonEmpty) return rebuild()
-      if (racedMutation()) return rebuild() // see racedMutation scaladoc
-      val storage = mvStorageNames(mv.aggs)
-      val d = storage.foldLeft(delta)((df, n) =>
-        df.withColumnRenamed(n, s"__d_$n"))
-      // inner join (only groups that lost rows change) over the ADDRESSED
-      // view read, checkpointed once: values feed the subtract-merge,
-      // _bid/_rid feed putIntoAddressed's delete side — the view scans
-      // once per refresh instead of twice (see appendMerge)
-      val joined = GraftStoreOps.readAddressed(spark, nm) // session-independent
-        .join(d, mv.groupCols, "inner")
-        .localCheckpoint(false)
-      val merged = joined
-        .select((mv.groupCols.map(col) ++ storage.map(n =>
-          (col(n) - coalesce(col(s"__d_$n"), lit(0))).as(n))): _*)
-      val schema = GraftStoreOps.read(spark, nm).schema
-      val conformed = merged.select(schema.fieldNames.map(f =>
-        col(f).cast(schema(f).dataType).as(f)).toSeq: _*)
-      MatViews.inMaintenance {
-        // source: unique(view-key) ⋈ unique(groupBy output) — key-unique;
-        // matched: exactly the inner join's view rows
-        GraftStoreOps.putIntoAddressed(spark, nm, conformed, joined)
-      }
-      MatViews.register(registered())
-      "incremental_delete"
-    }
-    // two-sided update refresh: rows addressed by the NEW deltas,
-    // valued "old" (recorded delta set) and "new" (current), each
-    // aggregated through the view shape; the old side NEGATES so one
-    // union sum-merge subtracts old contributions and adds new ones —
-    // a row whose update moved it between groups (or across the view
-    // predicate) nets correctly on both sides
-    def updateRefresh(movingT: String, movedIds: Set[Long],
-        since: Set[Long]): String = {
-      val conds = mv.joins.map(_.conds).getOrElse(Nil)
-      val ids = freshNow.view.mapValues(_.refIds).toMap
-      def side(which: String) = mvContents(tables, conds, ids,
-        mv.groupCols, mv.groupQual, mv.aggs, mv.predicate,
-        special = Some((movingT, MvUpdatedRead(movedIds, since, which))))
-      val storage = mvStorageNames(mv.aggs)
-      val negOld = storage.foldLeft(side("old"))((df, n) =>
-        df.withColumn(n, -col(n)))
-      val delta = side("new").unionByName(negOld).localCheckpoint(false)
-      // NULL group keys defeat the keyed merge — correctness wins
-      if (delta.filter(mv.groupCols.map(col(_).isNull)
-          .reduce(_ || _)).take(1).nonEmpty) return rebuild()
-      if (racedMutation()) return rebuild() // see racedMutation scaladoc
-      val keep = mv.groupCols.map(col)
-      // addressed + checkpointed touched frame — same single-view-scan
-      // shape as appendMerge (values → merge, _bid/_rid → delete side)
-      val touched = GraftStoreOps.readAddressed(spark, nm) // session-independent
-        .join(delta.select(keep: _*), mv.groupCols, "left_semi")
-        .localCheckpoint(false)
-      val mergeCols = MatViewSupport.mergeAggs(storage)
-      val merged = touched.drop("_bid", "_rid").unionByName(delta)
-        .groupBy(keep: _*).agg(mergeCols.head, mergeCols.tail: _*)
-      val schema = GraftStoreOps.read(spark, nm).schema
-      val conformed = merged.select(schema.fieldNames.map(f =>
-        col(f).cast(schema(f).dataType).as(f)).toSeq: _*)
-      MatViews.inMaintenance {
-        // source: groupBy(key) output — key-unique; matched: the view
-        // rows whose key ∈ delta keys, exactly putInto's address set
-        GraftStoreOps.putIntoAddressed(spark, nm, conformed, touched)
-      }
-      MatViews.register(registered())
-      "incremental_update"
     }
     // group-pruned partial rebuild: re-aggregate ONLY the groups in
     // `touchedKeys` from the CURRENT base (left-semi restriction —
@@ -1640,23 +1550,14 @@ class GraftSession(val spark: SparkSession)
       })
     }
     def partialRebuild(touchedKeys: DataFrame): String = {
-      val conds = mv.joins.map(_.conds).getOrElse(Nil)
-      val ids = freshNow.view.mapValues(_.refIds).toMap
       val touched = touchedKeys.distinct().localCheckpoint(false)
-      // NULL group keys defeat the keyed semi-join/putInto/deleteKeys
-      if (touched.filter(mv.groupCols.map(col(_).isNull)
-          .reduce(_ || _)).take(1).nonEmpty) return rebuild()
-      if (partialCannotPrune(touched)) return rebuild()
+      if (hasNullKey(touched) || partialCannotPrune(touched)) return rebuild()
       val cols = MatViewSupport.buildAggs(mv.aggs)
       val refreshed = mvScan(tables, conds, ids, mv.predicate)
         .join(touched, mv.groupCols, "left_semi")
         .groupBy(mvKeys(mv.groupCols, mv.groupQual): _*)
         .agg(cols.head, cols.tail: _*)
         .localCheckpoint(false)
-      val mvRows = GraftStoreOps.read(spark, nm) // session-independent
-      val schema = mvRows.schema
-      val conformed = refreshed.select(schema.fieldNames.map(f =>
-        col(f).cast(schema(f).dataType).as(f)).toSeq: _*)
       // groups whose every contributing row vanished produce no
       // refreshed row: their summary rows delete by key (the view table
       // is keyed by the group columns). Guarded — both inputs are
@@ -1667,7 +1568,7 @@ class GraftSession(val spark: SparkSession)
         refreshed.select(mv.groupCols.map(col): _*), mv.groupCols, "left_anti")
       MatViews.inMaintenance {
         if (vanished.take(1).nonEmpty) GraftStoreOps.deleteKeys(spark, nm, vanished)
-        GraftStoreOps.putInto(spark, nm, conformed,
+        GraftStoreOps.putInto(spark, nm, GraftStoreOps.conform(nm, refreshed),
           sourceKeyUnique = true) // groupBy(key) / unique-join output
       }
       // the partial path's refreshed groups reflect SCAN-time truth
@@ -1675,7 +1576,7 @@ class GraftSession(val spark: SparkSession)
       // mutation racing it leaves content the freshNow fingerprint does
       // not describe — register DIRTY on a race (stale to the rewrite,
       // and the next refresh rebuilds instead of trusting the record)
-      MatViews.register(registered().copy(dirty = racedMutation()))
+      MatViews.register(recordedAt(mv, freshNow, dirty = racedMutation()))
       "partial"
     }
     val moving = tables.filterNot(identical)
@@ -1688,7 +1589,6 @@ class GraftSession(val spark: SparkSession)
     // terms is exactly the view rows that did not exist at the last
     // refresh, with no pair counted twice.
     def telescopedAppendDeltas(movers: Seq[String]): Seq[DataFrame] = {
-      val conds = mv.joins.map(_.conds).getOrElse(Nil)
       var done = Set.empty[String]
       movers.map { m =>
         val pinned = tables.map { t =>
@@ -1697,178 +1597,102 @@ class GraftSession(val spark: SparkSession)
           else freshNow(t).refIds)
         }.toMap
         done += m
-        mvContents(tables, conds, pinned, mv.groupCols, mv.groupQual,
-          mv.aggs, mv.predicate)
+        contents(pinned)
       }
     }
-    // keyed merge of an APPEND delta (storage-shaped rows): touched
-    // summary rows ∪ delta, sum/min/max/union-merged by group key
-    // through putInto — shared by the single- and multi-mover paths
-    def appendMerge(delta: DataFrame): Unit = {
-      val keep = mv.groupCols.map(col)
-      val storage = mvStorageNames(mv.aggs)
-      // ADDRESSED view read, semi-joined against the delta keys ONCE and
-      // checkpointed: the same touched frame feeds the merge (values) AND
-      // putIntoAddressed's delete side (_bid/_rid). putInto previously
-      // re-scanned the whole view and re-derived this exact semi join to
-      // address the matched rows — one full view pass per refresh saved.
-      val touched = GraftStoreOps.readAddressed(spark, nm) // session-independent
-        .join(delta.select(keep: _*), mv.groupCols, "left_semi")
-        .localCheckpoint(false)
-      val mergeCols = MatViewSupport.mergeAggs(storage)
-      val merged = touched.drop("_bid", "_rid").unionByName(delta)
-        .groupBy(keep: _*).agg(mergeCols.head, mergeCols.tail: _*)
-      // conform to the stored schema exactly (sum() widening: decimal
-      // sums grow precision on the merge pass)
-      val schema = GraftStoreOps.read(spark, nm).schema
-      val conformed = merged.select(schema.fieldNames.map(f =>
-        col(f).cast(schema(f).dataType).as(f)).toSeq: _*)
-      MatViews.inMaintenance {
-        // source: groupBy(key) output — key-unique; matched: the view
-        // rows whose key ∈ delta keys, exactly putInto's address set
-        GraftStoreOps.putIntoAddressed(spark, nm, conformed, touched)
-      }
-      MatViews.register(registered())
-    }
-    // GLOBAL-aggregate views (no GROUP BY) hold exactly ONE summary row;
-    // every delta path degenerates to folding a signed single-row delta
-    // into the stored row — no keyed merge, no vanished-group handling.
-    // A view emptied by deletes keeps its zero-count row, which the
-    // rewrite's count mask turns back into empty-input aggregate
-    // semantics (count 0, sum NULL) at serve time. The merged row is
-    // materialized (eager local checkpoint) BEFORE the overwrite drops
-    // the stored row it reads from; the overwrite itself is a
-    // single-row createTable — the O(table) part of a rebuild is its
-    // base scan, which these paths replace with O(delta) reads.
-    def globalRefresh(): String = {
-      val conds = mv.joins.map(_.conds).getOrElse(Nil)
-      val storage = mvStorageNames(mv.aggs)
-      def negate(df: DataFrame): DataFrame = storage.foldLeft(df)((d, n) =>
-        d.withColumn(n, -col(n)))
-      val ids = freshNow.view.mapValues(_.refIds).toMap
-      val (terms, path): (Option[Seq[DataFrame]], String) =
-        if (moving.forall(appendOnly))
-          (Some(telescopedAppendDeltas(moving)),
-            if (moving.size > 1) "incremental_multi" else "incremental")
-        else if (moving.size == 1 && subtractable) {
-          val t = moving.head
-          classifyMove(t) match {
-            case Some(MvMove(moved, _, true, false)) => // deletes only
-              (deleteExcludes(t, moved).map { excl =>
-                Seq(negate(mvContents(tables, conds, ids, mv.groupCols,
-                  mv.groupQual, mv.aggs, mv.predicate,
-                  special = Some((t, MvDeletedRead(moved, excl))))))
-              }, "incremental_delete")
-            case Some(MvMove(moved, since, false, true)) => // updates only
-              def side(which: String) = mvContents(tables, conds, ids,
-                mv.groupCols, mv.groupQual, mv.aggs, mv.predicate,
-                special = Some((t, MvUpdatedRead(moved, since, which))))
-              (Some(Seq(side("new"), negate(side("old")))), "incremental_update")
-            case _ => (None, "")
-          }
-        } else (None, "")
-      terms match {
-        case None => rebuild()
-        case Some(ds) =>
-          val mvRows = GraftStoreOps.read(spark, nm) // session-independent
-          val schema = mvRows.schema
-          val mergeCols = MatViewSupport.mergeAggs(storage)
-          val merged = ds.foldLeft(mvRows: DataFrame)(_ unionByName _)
-            .groupBy().agg(mergeCols.head, mergeCols.tail: _*)
-          val conformed = merged.select(schema.fieldNames.map(f =>
-            col(f).cast(schema(f).dataType).as(f)).toSeq: _*)
-            .localCheckpoint(true)
-          if (racedMutation()) rebuild() // see racedMutation scaladoc
-          else {
-            val buckets = math.max(GraftColumnStore.get(nm)
-              .map(_.snapshot.numBuckets).getOrElse(32), 1)
-            // same supersede/restore discipline as rebuild(): a failed
-            // overwrite must not leave the view silently vanished
-            try MatViews.inMaintenance {
-              createTable(nm, conformed, keyColumns = mv.groupCols,
-                partitionBy = mv.groupCols, buckets = buckets)
-            } catch { case e: Throwable => MatViews.register(mv); throw e }
-            // post-build re-proof (rebuild's dirty sandwich): on a race
-            // the content/fingerprint pairing is unprovable
-            MatViews.register(registered().copy(dirty = racedMutation()))
-            path
-          }
-      }
-    }
-    // exactly one moving table drives every O(delta)/partial path —
+    // exactly one moving table drives every subtractive/partial path —
     // symmetric for fact- or dim-side moves on join views (the other
     // tables' fingerprints carry). Classified once: the fingerprint
     // diff walks every batch ref of the moving table, driver metadata.
+    lazy val move = classifyMove(moving.head)
+    // the signed delta terms of the O(delta) paths (see the scaladoc),
+    // with the path they report; None when no signed path applies
+    def signedTerms(): Option[(Seq[DataFrame], String)] =
+      if (moving.forall(appendOnly))
+        Some((telescopedAppendDeltas(moving),
+          if (moving.size > 1) "incremental_multi" else "incremental"))
+      else if (moving.size == 1 && subtractable) {
+        val t = moving.head
+        move match {
+          case Some(MvMove(moved, _, true, false)) => // deletes only
+            deleteExcludes(t, moved).map(excl => (Seq(negate(
+              contents(ids, Some((t, MvDeletedRead(moved, excl)))))),
+              "incremental_delete"))
+          case Some(MvMove(moved, since, false, true)) => // updates only
+            def side(which: String) =
+              contents(ids, Some((t, MvUpdatedRead(moved, since, which))))
+            Some((Seq(side("new"), negate(side("old"))), "incremental_update"))
+          case _ => None
+        }
+      } else None
+    // one tail applies the terms. A keyed view merges them in the store.
+    // A GLOBAL view holds exactly ONE summary row and folds them into it
+    // (an emptied view keeps its zero-count row, which the rewrite's
+    // count mask turns back into empty-input semantics at serve time):
+    // the folded row is materialized (eager checkpoint) BEFORE the
+    // single-row overwrite drops the stored row it reads from.
+    def applyTerms(terms: Seq[DataFrame], path: String): String = {
+      val mergeCols = MatViewSupport.mergeAggs(storage)
+      if (mv.groupCols.isEmpty) {
+        val folded = GraftStoreOps.conform(nm,
+          terms.foldLeft(GraftStoreOps.read(spark, nm))(_ unionByName _) // session-independent
+            .groupBy().agg(mergeCols.head, mergeCols.tail: _*))
+          .localCheckpoint(true)
+        if (racedMutation()) return rebuild()
+        materializeView(mv, freshNow, folded, viewBuckets)
+      } else {
+        val delta = terms.reduce(_ unionByName _).localCheckpoint(false)
+        if (hasNullKey(delta) || racedMutation()) return rebuild()
+        MatViews.inMaintenance {
+          GraftStoreOps.mergeInto(spark, nm, delta, mergeCols)
+        }
+        MatViews.register(recordedAt(mv, freshNow, dirty = false))
+      }
+      path
+    }
+    def keysOf(t: String, read: MvTableRead): DataFrame =
+      mvScan(tables, conds, ids, mv.predicate, special = Some((t, read)))
+        .select(mvKeys(mv.groupCols, mv.groupQual): _*)
     // A DIRTY registration rebuilds unconditionally: its recorded
     // fingerprint does not describe its content (a prior refresh
     // detected a racing mutation), so no delta may trust it.
     if (mv.dirty) rebuild()
     else if (moving.isEmpty) "noop"
-    else if (mv.groupCols.isEmpty) globalRefresh()
-    else if (moving.forall(appendOnly)) {
-      // pure appends — one mover takes the classic O(delta) merge,
-      // several movers compose telescopically (one term each)
-      val delta = telescopedAppendDeltas(moving)
-        .reduce(_ unionByName _).localCheckpoint(false)
-      // a NULL group key defeats the equality-keyed merge join below
-      // (and putInto's key matching) — correctness wins: full rebuild.
-      // racedMutation: a delete racing this append-refresh would hide
-      // tombstoned rows from the delta scan while the recorded
-      // fingerprint still claims them — the next refresh's subtractive
-      // path would then remove them a second time (see racedMutation)
-      if (delta.filter(mv.groupCols.map(col(_).isNull)
-          .reduce(_ || _)).take(1).nonEmpty || racedMutation()) rebuild()
-      else {
-        appendMerge(delta)
-        if (moving.size > 1) "incremental_multi" else "incremental"
-      }
-    }
-    else if (moving.size > 1) rebuild() // a MUTATING table among several
-      // movers: its delta terms would need recorded-state reads of the
-      // OTHER movers' mutations too — out of the telescoping algebra
-    else {
-      val t = moving.head
-      val conds = mv.joins.map(_.conds).getOrElse(Nil)
-      val ids = freshNow.view.mapValues(_.refIds).toMap
-      def updKeys(moved: Set[Long], since: Set[Long], which: String) =
-        mvScan(tables, conds, ids, mv.predicate,
-          special = Some((t, MvUpdatedRead(moved, since, which))))
-          .select(mvKeys(mv.groupCols, mv.groupQual): _*)
-      def delKeys(moved: Set[Long], since: Set[Long], oldValues: Boolean) =
-        mvScan(tables, conds, ids, mv.predicate,
-          special = Some((t, MvDeletedRead(moved, Map.empty, since, oldValues))))
-          .select(mvKeys(mv.groupCols, mv.groupQual): _*)
-      classifyMove(t) match {
-        case Some(MvMove(moved, _, true, false)) => // deletes only
-          (if (subtractable) deleteExcludes(t, moved) else None) match {
-            case Some(excl) => subtractiveRefresh(t, moved, excl)
-            case None =>
-              // affected groups = groups of ALL tombstoned rows in the
-              // moved batches — a superset of the newly-tombstoned
-              // (idempotent to re-aggregate), needing no recorded
-              // payload; deltas carried, so current values ARE the
-              // values the summary saw
-              partialRebuild(delKeys(moved, Set.empty, oldValues = false))
-          }
-        case Some(MvMove(moved, since, false, true)) => // updates only
-          if (subtractable) updateRefresh(t, moved, since)
-          else
+    else signedTerms() match {
+      case Some((terms, path)) => applyTerms(terms, path)
+      // a MUTATING table among several movers: its delta terms would
+      // need recorded-state reads of the OTHER movers' mutations too —
+      // out of the telescoping algebra
+      case None if mv.groupCols.isEmpty || moving.size > 1 => rebuild()
+      case None =>
+        val t = moving.head
+        move match {
+          case Some(MvMove(moved, _, true, false)) => // deletes only
+            // affected groups = groups of ALL tombstoned rows in the
+            // moved batches — a superset of the newly-tombstoned
+            // (idempotent to re-aggregate), needing no recorded
+            // payload; deltas carried, so current values ARE the
+            // values the summary saw
+            partialRebuild(keysOf(t, MvDeletedRead(moved, Map.empty)))
+          case Some(MvMove(moved, since, false, true)) => // updates only
             // both sides: an update can move a row between groups or
             // across the view predicate — old and new keys both touch
-            partialRebuild(updKeys(moved, since, "old")
-              .unionByName(updKeys(moved, since, "new")))
-        case Some(MvMove(moved, since, _, _)) => // mixed update + delete
-          // affected groups = tombstoned rows' groups valued BOTH ways
-          // (an update may have moved a row between groups — or across
-          // the predicate — before its delete, and the updated-rows
-          // reads cannot see it: they filter on the current bitmap)
-          // ∪ the surviving updated rows' old+new groups
-          partialRebuild(delKeys(moved, since, oldValues = false)
-            .unionByName(delKeys(moved, since, oldValues = true))
-            .unionByName(updKeys(moved, since, "old"))
-            .unionByName(updKeys(moved, since, "new")))
-        case None => rebuild() // expiry, emptied batches, compaction …
-      }
+            partialRebuild(keysOf(t, MvUpdatedRead(moved, since, "old"))
+              .unionByName(keysOf(t, MvUpdatedRead(moved, since, "new"))))
+          case Some(MvMove(moved, since, _, _)) => // mixed update + delete
+            // affected groups = tombstoned rows' groups valued BOTH ways
+            // (an update may have moved a row between groups — or across
+            // the predicate — before its delete, and the updated-rows
+            // reads cannot see it: they filter on the current bitmap)
+            // ∪ the surviving updated rows' old+new groups
+            partialRebuild(
+              keysOf(t, MvDeletedRead(moved, Map.empty, since, oldValues = false))
+                .unionByName(keysOf(t, MvDeletedRead(moved, Map.empty, since,
+                  oldValues = true)))
+                .unionByName(keysOf(t, MvUpdatedRead(moved, since, "old")))
+                .unionByName(keysOf(t, MvUpdatedRead(moved, since, "new"))))
+          case None => rebuild() // expiry, emptied batches, compaction …
+        }
     }
   }
 

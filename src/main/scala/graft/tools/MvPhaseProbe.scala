@@ -6,9 +6,11 @@ import graft.{GraftSession, Tables}
 
 /** Phase-level timing of a representative matview lifecycle (the
   * q_matview_incremental shape): createTable → create MV → insert →
-  * refresh → serve. Identifies which ENGINE call carries the cost of the
-  * bench's matview family (optimization-round evidence; the bench times
-  * whole lifecycles, so this is the decomposition the UI would give us).
+  * refresh → serve, then a delete wave and an update wave, each followed
+  * by its O(delta) refresh. Every phase prints wall time, Spark jobs and
+  * stages, so each refresh path (`incremental`, `incremental_delete`,
+  * `incremental_update`) has its own per-path counters. The measure is
+  * made non-nullable with `coalesce`, which the subtractive paths need.
   * Usage: runMain graft.tools.MvPhaseProbe [sfDir] [reps]
   */
 object MvPhaseProbe {
@@ -47,10 +49,11 @@ object MvPhaseProbe {
       val orders = Tables.load(spark, sfDir, "orders")
       val old = orders.filter(col("o_orderkey") % 10 =!= 0)
       val delta = orders.filter(col("o_orderkey") % 10 === 0)
-      val oldAmt = old.withColumn("amt",
-        col("o_totalprice").cast("decimal(18,4)"))
-      val deltaAmt = delta.withColumn("amt",
-        col("o_totalprice").cast("decimal(18,4)"))
+      def withAmt(df: org.apache.spark.sql.DataFrame) = df.withColumn("amt",
+        coalesce(col("o_totalprice").cast("decimal(18,4)"),
+          lit(0).cast("decimal(18,4)")))
+      val oldAmt = withAmt(old)
+      val deltaAmt = withAmt(delta)
       t("createTable(base 90%)") {
         g.createTable("p_mv_base", oldAmt)
       }
@@ -62,15 +65,26 @@ object MvPhaseProbe {
       t("insert delta (10%)") {
         g.insert("p_mv_base", deltaAmt)
       }
-      t("refresh (incremental)") {
+      def refresh(path: String): Unit = t(s"refresh ($path)") {
         val p = g.refreshMaterializedView("p_mv_sum")
-        require(p == "incremental", s"got $p")
+        require(p == path, s"expected $path, got $p")
       }
+      refresh("incremental")
       t("serve (rewritten query)") {
         spark.sql("SELECT o_orderpriority, sum(amt) AS s " +
           "FROM p_mv_base GROUP BY o_orderpriority")
           .write.format("noop").mode("overwrite").save()
       }
+      // every base batch keeps live rows, so the batch set is unchanged
+      t("delete wave (10%)") {
+        g.delete("p_mv_base", col("o_orderkey") % 10 === 1)
+      }
+      refresh("incremental_delete")
+      t("update wave (10%)") {
+        g.update("p_mv_base", col("o_orderkey") % 10 === 2,
+          "amt" -> (col("amt") + lit(1)))
+      }
+      refresh("incremental_update")
     }
     spark.stop()
   }

@@ -31,19 +31,14 @@ object GraftStoreOps {
   def read(spark: SparkSession, table: String): DataFrame =
     spark.read.format(FORMAT).option("table", table).load()
 
-  /** The scan plus its physical row address (hidden metadata columns).
-    * Public for callers that compute a matched-row frame ONCE and thread
-    * it through [[putIntoAddressed]] (the matview refresh merges) — the
-    * address columns are `_bid`/`_rid`, leading.
+  /** The scan plus its physical row address (hidden metadata columns),
+    * as leading `_bid`/`_rid` columns.
     */
-  def readAddressed(spark: SparkSession, table: String): DataFrame = {
+  private def withAddress(spark: SparkSession, table: String): DataFrame = {
     val df = read(spark, table)
     df.select(df.metadataColumn(GraftTable.BATCH_ID_COL).as("_bid"),
       df.metadataColumn(GraftTable.ROW_IDX_COL).as("_rid"), col("*"))
   }
-
-  private def withAddress(spark: SparkSession, table: String): DataFrame =
-    readAddressed(spark, table)
 
   /** DELETE FROM table WHERE cond. */
   def delete(spark: SparkSession, table: String, cond: Column): Unit = {
@@ -188,8 +183,8 @@ object GraftStoreOps {
 
   /** As [[putInto]]; `sourceKeyUnique = true` skips the key
     * deduplication pass when the CALLER proves the source is unique per
-    * key (the matview refresh merges are groupBy(key) outputs — re-
-    * deduplicating them costs an extra aggregate of the whole merge
+    * key (the matview partial refresh merges a groupBy(key) output —
+    * re-deduplicating it costs an extra aggregate of the whole merge
     * frame on every refresh for rows that cannot collide).
     *
     * CONTRACT, not a hint: passing `true` with a duplicate-keyed source
@@ -224,32 +219,67 @@ object GraftStoreOps {
     commitPut(table, src, staged)
   }
 
-  /** The refresh-merge fast path: as [[putInto]] with a key-unique
-    * source, where the caller ALSO supplies `matched` — the CURRENT rows
-    * of `table` whose key appears in `source`, carrying the `_bid`/`_rid`
-    * address columns of [[readAddressed]]. The matview refresh merges
-    * already semi-join the view against their delta's keys to build the
-    * merge frame; threading that same (checkpointed) frame here drops
-    * putInto's second full scan + semi-join of the table on every
-    * refresh. Same contract discipline as `sourceKeyUnique`: `matched`
-    * must cover EXACTLY the key-matched target rows — missing rows
-    * duplicate keys, extra rows lose them.
+  /** Keyed MERGE of a signed delta (the matview refresh step): the rows
+    * of `table` whose key appears in `delta` are combined with the delta
+    * rows by key through `mergeCols`, and the result replaces them; delta
+    * keys the table does not hold insert.
+    *
+    * `delta` has exactly the table's columns (types may be wider: a
+    * decimal sum grows precision) and may repeat a key. `mergeCols` are
+    * aggregates over those columns, one per non-key column and aliased
+    * to it — sums add signed values, so a negative delta subtracts, and
+    * min/max/HLL slots merge. A row whose sum-merge reaches zero stays.
+    * Rows with a NULL key never match a stored row and insert as new
+    * rows, so a caller with nullable keys must route them elsewhere.
+    *
+    * One cached join feeds both sides, as in the reference's PUT INTO:
+    * the addressed table is semi-joined against the delta's keys and
+    * checkpointed once; its values feed the merge and its `_bid`/`_rid`
+    * feed the delete bitmaps. The merged rows are key-unique by
+    * construction (a groupBy over the key), are cast to the snapshot
+    * schema, and commit with the deletes in one atomic swap. O(delta +
+    * touched rows); the table is never scanned twice.
     */
-  def putIntoAddressed(spark: SparkSession, table: String, source: DataFrame,
-      matched: DataFrame): Unit = {
-    ReplicaGuard.requireWritable(table, "putInto")
+  def mergeInto(spark: SparkSession, table: String, delta: DataFrame,
+      mergeCols: Seq[Column]): Unit = {
+    ReplicaGuard.requireWritable(table, "mergeInto")
     MatViews.guardWrite(table)
-    val t = GraftColumnStore(table)
-    val keyCols = t.snapshot.keyColumns
-    require(keyCols.nonEmpty, s"putInto($table) requires key_columns")
-    // no localCheckpoint here: the source feeds exactly ONE action (the
-    // append) — the delete side reads the caller's matched frame
-    val src = alignToSchema(t, source)
+    val snap = GraftColumnStore(table).snapshot
+    val keyCols = snap.keyColumns
+    require(keyCols.nonEmpty, s"mergeInto($table) requires key_columns")
+    require(mergeCols.nonEmpty, s"mergeInto($table) requires merge aggregates")
+    val keys = keyCols.map(col)
+    val touched = withAddress(spark, table)
+      .join(delta.select(keys: _*), keyCols, "left_semi")
+      .localCheckpoint(false)
+    // the delete side (last, below) materializes the checkpoint,
+    // scanning in the table's own partitions; touched holds at most one
+    // row per delta key, so it merges in as many tasks as the delta has
+    // (an empty delta may plan with none)
+    val unioned = touched.drop("_bid", "_rid")
+      .coalesce(math.max(delta.rdd.getNumPartitions, 1)).unionByName(delta)
+    // group on the write's own bucket shuffle: hash-partitioned by the
+    // bucket columns into numBuckets, the merge aggregate needs no
+    // exchange of its own and Spark drops the write's now-redundant
+    // repartition — one shuffle per merge, not two
+    val clustered =
+      if (snap.bucketBy.nonEmpty && snap.numBuckets > 0 &&
+          snap.bucketBy.forall(keyCols.contains))
+        unioned.repartition(snap.numBuckets, snap.bucketBy.map(col): _*)
+      else unioned
+    val merged = clustered.groupBy(keys: _*).agg(mergeCols.head, mergeCols.tail: _*)
+    val src = conform(table, merged)
     assertSourceKeyUnique(spark, table, src, keyCols)
-    val staged = collectDeleteRefs(spark,
-      matched.select(col("_bid"), col("_rid")))
-    commitPut(table, src, staged)
+    commitPut(table, src, collectDeleteRefs(spark, touched))
   }
+
+  /** `df`'s columns cast to `table`'s snapshot schema, by name and in
+    * schema order — undoes aggregate widening (a decimal sum grows
+    * precision) without resolving a read of the table.
+    */
+  def conform(table: String, df: DataFrame): DataFrame =
+    df.select(GraftColumnStore(table).schema.fields.toSeq.map(f =>
+      col(f.name).cast(f.dataType).as(f.name)): _*)
 
   private def alignToSchema(t: GraftColumnStore.StoreTable,
       source: DataFrame): DataFrame = {
@@ -277,8 +307,8 @@ object GraftStoreOps {
   }
 
   /** Stage the delete refs under a fresh token and run the append commit,
-    * which applies both in one atomic snapshot swap (shared tail of the
-    * putInto variants).
+    * which applies both in one atomic snapshot swap (shared tail of
+    * putInto and mergeInto).
     */
   private def commitPut(table: String, src: DataFrame,
       staged: Map[Long, GraftColumnStore.DeleteRef]): Unit = {

@@ -499,7 +499,7 @@ object MatViewSupport extends PredicateHelper {
         else if (n.endsWith("_hll")) hll_union_agg(col(n))
         else sum(col(n))
       // sum() widens (long→long is stable but decimal grows precision):
-      // cast back so putInto sees exactly the stored schema
+      // the merge casts back to the stored schema (GraftStoreOps.conform)
       merged.as(n)
     }
   }

@@ -246,29 +246,37 @@ class GraftStoreSpec extends SparkTestBase {
     g.dropTable("s_puk")
   }
 
-  test("putIntoAddressed: caller-threaded matched frame upserts like putInto") {
+  test("mergeInto: signed keyed merge adds, inserts, subtracts to kept zero rows") {
     val g = GraftSession(spark)
-    freshOrders("s_pia")
-    val orders = Tables.load(spark, sf, "orders")
-    val src = orders.filter(col("o_orderkey") % 10 === 0)
-      .withColumn("o_orderstatus", lit("UPSERTED"))
-      .unionByName(orders.filter(col("o_orderkey") % 10 === 1)
-        .withColumn("o_orderkey", col("o_orderkey") + 5000000L)
-        .withColumn("o_orderstatus", lit("FRESH")))
-      .localCheckpoint(true)
-    // the refresh-merge calling convention: addressed read ⋉ source keys
-    val matched = GraftStoreOps.readAddressed(spark, "s_pia")
-      .join(src.select(col("o_orderkey")), Seq("o_orderkey"), "left_semi")
-      .localCheckpoint(false)
-    GraftStoreOps.putIntoAddressed(spark, "s_pia", src, matched)
-    val t = g.table("s_pia")
-    val nMatched = orders.filter(col("o_orderkey") % 10 === 0).count()
-    val nNew = orders.filter(col("o_orderkey") % 10 === 1).count()
-    assert(t.count() == orders.count() + nNew)
-    assert(t.filter(col("o_orderstatus") === "UPSERTED").count() == nMatched)
-    assert(t.filter(col("o_orderstatus") === "FRESH").count() == nNew)
-    assert(t.groupBy("o_orderkey").count().filter(col("count") > 1).count() == 0)
-    g.dropTable("s_pia")
+    // a summary-shaped keyed table: k -> (sum s, count c, max mx)
+    g.createTable("s_mrg", spark.range(100).select(col("id").as("k"),
+      (col("id") * 10).as("s"), lit(1L).as("c"), col("id").as("mx")),
+      keyColumns = Seq("k"), partitionBy = Seq("k"), buckets = 4)
+    def row(k: Long, s: Long, c: Long, mx: Long) = (k, s, c, mx)
+    val delta = (0L until 20L).map(k => row(k, 5, 1, k + 200)) ++ // matched: add
+      (1000L until 1010L).map(k => row(k, 7, 1, 3)) ++ // unmatched: insert
+      Seq(row(50, -500, -1, 0), // subtracts down to a zero row
+        row(60, 1, 1, 0), row(60, 2, 1, 0)) // a repeated key merges too
+    val deltaDf = spark.createDataFrame(delta).toDF("k", "s", "c", "mx")
+    val mergeCols = Seq(sum(col("s")).as("s"), sum(col("c")).as("c"), max(col("mx")).as("mx"))
+    spark.conf.set("spark.sql.graft.putInto.verifySourceKeyUnique", "true")
+    try GraftStoreOps.mergeInto(spark, "s_mrg", deltaDf, mergeCols)
+    finally spark.conf.unset("spark.sql.graft.putInto.verifySourceKeyUnique")
+    // an empty delta (it may plan with no partitions) changes nothing
+    GraftStoreOps.mergeInto(spark, "s_mrg", deltaDf.filter(lit(false)), mergeCols)
+    val expected = delta.foldLeft((0L until 100L).map(k => k -> (k * 10, 1L, k)).toMap) {
+      case (m, (k, s, c, mx)) =>
+        val (s0, c0, mx0) = m.getOrElse(k, (0L, 0L, Long.MinValue))
+        m.updated(k, (s0 + s, c0 + c, math.max(mx0, mx)))
+    }
+    val got = g.table("s_mrg").collect().map(r =>
+      r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(got.map(_._1).distinct.size == got.size, "keys must stay unique")
+    assert(got.toMap == expected)
+    assert(got.toMap.apply(50L) == ((0L, 0L, 50L)), "a zero row is kept")
+    assert(got.toMap.apply(7L) == ((75L, 2L, 207L)), "matched keys add the delta")
+    assert(got.toMap.apply(99L) == ((990L, 1L, 99L)), "keys outside the delta are untouched")
+    g.dropTable("s_mrg")
   }
 
   test("delta row buffer: small appends stay delta until compaction") {

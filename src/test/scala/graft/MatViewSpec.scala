@@ -236,6 +236,36 @@ class MatViewSpec extends SparkTestBase {
     val q = "SELECT k, sum(amt) AS sa, avg(amt) AS aa FROM mvb5 GROUP BY k"
     assert(usesMatView(q, "mv5"))
     assert(sorted(spark.sql(q)) == direct(q))
+    // a non-nullable decimal measure with a count(*) slot takes every
+    // signed path: the negated delete/old-update terms are negative
+    // decimals that must pass the widened sum-merge and cast back exactly
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi).select(col("id").as("pk"),
+      (col("id") % 5).cast("int").as("k"),
+      coalesce(((col("id") - 120) / 100.0).cast("decimal(12,2)"),
+        lit(0).cast("decimal(12,2)")).as("amt"))
+    g.createTable("mvb5n", rows(0, 200), partitionBy = Seq("pk"), buckets = 4)
+    assert(!g.table("mvb5n").schema("amt").nullable)
+    g.sql("CREATE MATERIALIZED VIEW mv5n AS SELECT k, sum(amt) AS sa, " +
+      "count(*) AS n, avg(amt) AS aa FROM mvb5n GROUP BY k")
+    val qn = "SELECT k, sum(amt) AS sa, count(*) AS n, avg(amt) AS aa FROM mvb5n GROUP BY k"
+    val qRoll = "SELECT sum(amt) AS sa, avg(amt) AS aa FROM mvb5n"
+    def exact(): Unit = Seq(qn, qRoll).foreach { vq =>
+      assert(usesMatView(vq, "mv5n"), vq)
+      assert(sorted(spark.sql(vq)) == direct(vq), vq)
+    }
+    g.insert("mvb5n", rows(200, 260))
+    assert(g.refreshMaterializedView("mv5n") == "incremental")
+    exact()
+    g.delete("mvb5n", col("pk") % 3 === 1)
+    assert(g.refreshMaterializedView("mv5n") == "incremental_delete")
+    exact()
+    g.update("mvb5n", col("pk") % 3 === 2,
+      "amt" -> (col("amt") * 3 - lit(new java.math.BigDecimal("1.17")))
+        .cast("decimal(12,2)"))
+    assert(g.refreshMaterializedView("mv5n") == "incremental_update")
+    exact()
+    g.dropMaterializedView("mv5n")
+    g.dropTable("mvb5n")
   }
 
   test("DROP TABLE on the base cascades; DROP MATERIALIZED VIEW drops the table") {
@@ -320,6 +350,15 @@ class MatViewSpec extends SparkTestBase {
     g.sql("CREATE MATERIALIZED VIEW mv9 AS " +
       "SELECT k, sum(w) AS sw, count(*) AS n, max(w) AS mx FROM mvb9 GROUP BY k")
     val q = "SELECT k, sum(w) AS sw, count(*) AS n, max(w) AS mx FROM mvb9 GROUP BY k"
+    // invertible siblings (w is non-nullable), refreshed after EVERY op
+    // so each refresh sees one op kind: a keyed and a global view of the
+    // same aggregates reach the signed append/delete/update paths that
+    // mv9's max(w) declines
+    val signed = Seq(
+      "mv9i" -> "SELECT k, sum(w) AS sw, count(*) AS n, avg(w) AS aw FROM mvb9 GROUP BY k",
+      "mv9g" -> "SELECT sum(w) AS sw, count(*) AS n, avg(w) AS aw FROM mvb9")
+    signed.foreach { case (v, vq) => g.sql(s"CREATE MATERIALIZED VIEW $v AS $vq") }
+    var signedPaths = Map.empty[(String, String), Int].withDefaultValue(0)
     var nextId = 1000L
     var servedFresh = 0
     var refreshPaths = Map.empty[String, Int].withDefaultValue(0)
@@ -340,6 +379,12 @@ class MatViewSpec extends SparkTestBase {
       }
       if (usesMatView(q, "mv9")) servedFresh += 1
       assert(sorted(spark.sql(q)) == direct(q), s"divergence at step $step")
+      signed.foreach { case (v, vq) =>
+        val p = g.refreshMaterializedView(v)
+        signedPaths += ((v, p) -> (signedPaths((v, p)) + 1))
+        assert(usesMatView(vq, v), s"$v must serve after its refresh at step $step")
+        assert(sorted(spark.sql(vq)) == direct(vq), s"$v divergence at step $step ($p)")
+      }
     }
     g.refreshMaterializedView("mv9")
     assert(usesMatView(q, "mv9"))
@@ -350,6 +395,9 @@ class MatViewSpec extends SparkTestBase {
     assert(servedFresh < 40, "seed never went stale")
     assert(refreshPaths("incremental") > 0 || refreshPaths("full") > 0,
       s"no refresh ran: $refreshPaths")
+    for ((v, _) <- signed; p <- Seq("incremental", "incremental_delete", "incremental_update"))
+      assert(signedPaths((v, p)) > 0, s"$v never took $p: $signedPaths")
+    signed.foreach { case (v, _) => g.dropMaterializedView(v) }
   }
 
   test("matview definition rides checkpoint/restore; restored view is stale until REFRESH") {
